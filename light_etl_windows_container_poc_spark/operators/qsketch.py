@@ -115,7 +115,7 @@ def qsketch_build(df: DataFrame, key_col: str, val_col: str,
 def merge_sketch_parts(cells: DataFrame, scal: DataFrame,
                        cap: int) -> DataFrame:
     """The shared L* re-decision over merged sketch parts — the ONE
-    implementation behind qsketch_merge, streaming read_qsketch, and
+    implementation behind qsketch_merge, the streaming QSKETCH merge, and
     the grouped rollup (a fix here fixes all three or the certified
     theorem diverges between them).
 

@@ -258,12 +258,14 @@ def _pack_blocks(b: DataFrame) -> DataFrame:
 
 def _unpack_block(ids_cell, flat_cell, dim_cell):
     """Aligned (ids, flat, dim) arrow cells → (int64 ids, row-major
-    matrix). Raises on any id/element-count desync (see _pack_blocks)."""
+    matrix). Raises on any id/element-count desync (see _pack_blocks),
+    including an all-null block, whose ``dim`` is NULL under ANSI
+    ``size`` semantics (-1 under the legacy ones)."""
     import numpy as np
 
     ids = np.asarray(ids_cell, dtype=np.int64)
     flat = np.asarray(flat_cell, dtype=np.float64)
-    dim = int(dim_cell)
+    dim = -1 if dim_cell is None else int(dim_cell)
     if ids.size == 0 or flat.size != ids.size * dim:
         raise ValueError(
             f"block desync: {ids.size} ids x dim {dim} vs {flat.size} "

@@ -353,8 +353,8 @@ def stream_heavy_hitters_cert(spark: SparkSession, sf_dir: str,
     import os
     import shutil
 
-    from ..streaming.heavy_hitters import (read_heavy_hitters,
-                                           start_heavy_hitters_stream)
+    from ..streaming import summary
+    from ..streaming.heavy_hitters import HEAVY_HITTERS
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     toks = docs.select(
@@ -366,12 +366,11 @@ def stream_heavy_hitters_cert(spark: SparkSession, sf_dir: str,
     toks.repartition(4).write.parquet(src)
     stream = (spark.readStream.schema("token string")
               .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_heavy_hitters_stream(stream, os.path.join(work, "state"),
-                                   os.path.join(work, "ckpt"),
-                                   "token", _SHH_K)
+    q = summary.start(HEAVY_HITTERS, stream, os.path.join(work, "state"),
+                      os.path.join(work, "ckpt"), "token", _SHH_K)
     q.awaitTermination(300)
-    sketch = read_heavy_hitters(spark, os.path.join(work, "state"),
-                                _SHH_K)
+    sketch = summary.read(HEAVY_HITTERS, spark,
+                          os.path.join(work, "state"), _SHH_K)
 
     exact = toks.groupBy("token").agg(
         F.count(F.lit(1)).cast("long").alias("exact_cnt"))

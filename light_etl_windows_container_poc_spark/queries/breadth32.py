@@ -415,7 +415,8 @@ def stream_countmin_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..operators.sketches import cm_point_query
-    from ..streaming.countmin import read_countmin, start_countmin_stream
+    from ..streaming import summary
+    from ..streaming.countmin import COUNTMIN
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
 
@@ -425,11 +426,11 @@ def stream_countmin_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.select("user_id").repartition(4).write.parquet(src)
     stream = (spark.readStream.schema("user_id long")
               .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_countmin_stream(stream, os.path.join(work, "state"),
-                              os.path.join(work, "ckpt"),
-                              "user_id", _CM_DEPTH, _CM_WIDTH)
+    q = summary.start(COUNTMIN, stream, os.path.join(work, "state"),
+                      os.path.join(work, "ckpt"),
+                      "user_id", _CM_DEPTH, _CM_WIDTH)
     q.awaitTermination(300)
-    counters = read_countmin(spark, os.path.join(work, "state"))
+    counters = summary.read(COUNTMIN, spark, os.path.join(work, "state"))
 
     exact = (ev.groupBy("user_id")
              .agg(F.count(F.lit(1)).alias("exact_cnt"))

@@ -250,8 +250,8 @@ def stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from ..streaming.histogram import (read_histogram,
-                                       start_histogram_stream)
+    from ..streaming import summary
+    from ..streaming.histogram import HISTOGRAM
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
     cents = ev.select(F.round(F.col("value") * 100).cast("long")
@@ -263,11 +263,11 @@ def stream_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents.repartition(4).write.parquet(src)
     stream = (spark.readStream.schema("cents long")
               .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_histogram_stream(stream, os.path.join(work, "state"),
-                               os.path.join(work, "ckpt"),
-                               "cents", _HQ_BIN)
+    q = summary.start(HISTOGRAM, stream, os.path.join(work, "state"),
+                      os.path.join(work, "ckpt"), "cents", _HQ_BIN)
     q.awaitTermination(300)
-    hist = read_histogram(spark, os.path.join(work, "state")).persist()
+    hist = summary.read(HISTOGRAM, spark,
+                        os.path.join(work, "state")).persist()
 
     n_total = int(hist.agg(F.sum("cnt")).first()[0])
     cum_w = W.orderBy("bin")

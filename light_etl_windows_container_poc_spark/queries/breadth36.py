@@ -144,7 +144,8 @@ def stream_hll_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from ..streaming.hll import read_hll, start_hll_stream
+    from ..streaming import summary
+    from ..streaming.hll import HLL
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
 
@@ -154,10 +155,11 @@ def stream_hll_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.select("user_id").repartition(4).write.parquet(src)
     stream = (spark.readStream.schema("user_id long")
               .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_hll_stream(stream, os.path.join(work, "state"),
-                         os.path.join(work, "ckpt"), "user_id", _HLL_M)
+    q = summary.start(HLL, stream, os.path.join(work, "state"),
+                      os.path.join(work, "ckpt"), "user_id", _HLL_M)
     q.awaitTermination(300)
-    out = read_hll(spark, os.path.join(work, "state")).orderBy("bucket")
+    out = (summary.read(HLL, spark, os.path.join(work, "state"))
+           .orderBy("bucket"))
     out = out.localCheckpoint(eager=True)
     shutil.rmtree(work, ignore_errors=True)
     return out

@@ -210,7 +210,8 @@ WITH {_QSK_SQL}
 SELECT key, val, lvl, l_star, n_total FROM kept ORDER BY key
 """)
 def stream_qsketch_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.qsketch import read_qsketch, start_qsketch_stream
+    from ..streaming import summary
+    from ..streaming.qsketch import QSKETCH
 
     df = _orders_cents(spark, sf_dir)
     work = cert_work_dir("sqsk", sf_dir)
@@ -219,11 +220,12 @@ def stream_qsketch_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     df.repartition(4).write.parquet(src)
     stream = (spark.readStream.schema("o_orderkey long, cents long")
               .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_qsketch_stream(stream, os.path.join(work, "state"),
-                             os.path.join(work, "ckpt"),
-                             "o_orderkey", "cents", _QSK_CAP)
+    q = summary.start(QSKETCH, stream, os.path.join(work, "state"),
+                      os.path.join(work, "ckpt"),
+                      "o_orderkey", "cents", _QSK_CAP)
     q.awaitTermination(300)
-    out = (read_qsketch(spark, os.path.join(work, "state"), _QSK_CAP)
+    out = (summary.read(QSKETCH, spark, os.path.join(work, "state"),
+                        _QSK_CAP)
            .orderBy("key"))
     out = out.localCheckpoint(eager=True)
     shutil.rmtree(work, ignore_errors=True)

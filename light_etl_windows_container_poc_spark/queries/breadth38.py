@@ -148,7 +148,8 @@ def stream_ams_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders.o_custkey streams in as 4 source files → 4 micro-batch
     partial vectors → manifest-aware read-time merge → the direct
     oracle. Rebuilt per call (the stream_countmin_cert pattern)."""
-    from ..streaming.ams import read_ams, start_ams_stream
+    from ..streaming import summary
+    from ..streaming.ams import AMS
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
 
@@ -158,10 +159,10 @@ def stream_ams_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders.select("o_custkey").repartition(4).write.parquet(src)
     stream = (spark.readStream.schema("o_custkey long")
               .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_ams_stream(stream, os.path.join(work, "state"),
-                         os.path.join(work, "ckpt"), "o_custkey", _AMS_J)
+    q = summary.start(AMS, stream, os.path.join(work, "state"),
+                      os.path.join(work, "ckpt"), "o_custkey", _AMS_J)
     q.awaitTermination(300)
-    vec = read_ams(spark, os.path.join(work, "state"))
+    vec = summary.read(AMS, spark, os.path.join(work, "state"))
     out = (vec.select(F.col("j").cast("long").alias("j"), "x")
            .orderBy("j").localCheckpoint(eager=True))
     shutil.rmtree(work, ignore_errors=True)
@@ -199,7 +200,8 @@ def stream_kmv_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     across batches, so the union-dedup path is exercised for real) →
     per-batch truncated hash sets → read-time merged sketch → the
     estimate relation."""
-    from ..streaming.kmv import read_kmv, start_kmv_stream
+    from ..streaming import summary
+    from ..streaming.kmv import KMV
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
 
@@ -209,11 +211,12 @@ def stream_kmv_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders.select("o_custkey").repartition(4).write.parquet(src)
     stream = (spark.readStream.schema("o_custkey long")
               .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_kmv_stream(stream, os.path.join(work, "state"),
-                         os.path.join(work, "ckpt"), "o_custkey",
-                         _KMV_STREAM_K)
+    q = summary.start(KMV, stream, os.path.join(work, "state"),
+                      os.path.join(work, "ckpt"), "o_custkey",
+                      _KMV_STREAM_K)
     q.awaitTermination(300)
-    sk = read_kmv(spark, os.path.join(work, "state"), _KMV_STREAM_K)
+    sk = summary.read(KMV, spark, os.path.join(work, "state"),
+                      _KMV_STREAM_K)
 
     n_exact = (orders.select("o_custkey").distinct().count())
     kth = (sk.orderBy(F.desc("h")).limit(1)

@@ -82,7 +82,8 @@ def weighted_sample_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query("stream_reservoir_cert", oracle=_WSAMPLE_SQL)
 def stream_reservoir_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.reservoir import read_reservoir, start_reservoir_stream
+    from ..streaming import summary
+    from ..streaming.reservoir import RESERVOIR
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
 
@@ -92,10 +93,11 @@ def stream_reservoir_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.select("doc_id", "text").repartition(4).write.parquet(src)
     stream = (spark.readStream.schema("doc_id long, text string")
               .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_reservoir_stream(stream, os.path.join(work, "state"),
-                               os.path.join(work, "ckpt"), _RSV_K)
+    q = summary.start(RESERVOIR, stream, os.path.join(work, "state"),
+                      os.path.join(work, "ckpt"), _RSV_K)
     q.awaitTermination(300)
-    out = (read_reservoir(spark, os.path.join(work, "state"), _RSV_K)
+    out = (summary.read(RESERVOIR, spark, os.path.join(work, "state"),
+                        _RSV_K)
            .localCheckpoint(eager=True))
     shutil.rmtree(work, ignore_errors=True)
     return out

@@ -52,8 +52,8 @@ def stream_bm25_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k; row-identical to the batch bm25_search query by the
     disjoint-batch union theorem (streaming/bm25.py module docstring)
     plus compaction answer-invariance."""
-    from ..streaming.bm25 import (bm25_topk, compact_bm25_state,
-                                  start_bm25_stream)
+    from ..streaming import summary
+    from ..streaming.bm25 import BM25, bm25_topk, compact_bm25_state
 
     docs = (load_tables(spark, sf_dir, ("documents",))["documents"]
             .select("doc_id", "text"))
@@ -64,8 +64,8 @@ def stream_bm25_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.repartition(3).write.parquet(src)
         stream = (spark.readStream.schema("doc_id long, text string")
                   .option("maxFilesPerTrigger", 1).parquet(src))
-        q = start_bm25_stream(stream, os.path.join(work, "state"),
-                              os.path.join(work, "ckpt"), "doc_id", "text")
+        q = summary.start(BM25, stream, os.path.join(work, "state"),
+                          os.path.join(work, "ckpt"), "doc_id", "text")
         assert q.awaitTermination(300), "bm25 ingest did not finish"
         compact_bm25_state(spark, os.path.join(work, "state"))
         out = bm25_topk(spark, os.path.join(work, "state"), _BM25_TERMS)
@@ -309,7 +309,8 @@ def bm25_batch_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay of per-query BM25 over the same corpus. Same scoring
     contract as bm25_search; the batch dimension is what it certifies
     beyond stream_bm25_cert."""
-    from ..streaming.bm25 import bm25_topk_batch, start_bm25_stream
+    from ..streaming import summary
+    from ..streaming.bm25 import BM25, bm25_topk_batch
 
     docs = (load_tables(spark, sf_dir, ("documents",))["documents"]
             .select("doc_id", "text"))
@@ -320,8 +321,8 @@ def bm25_batch_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.repartition(3).write.parquet(src)
         stream = (spark.readStream.schema("doc_id long, text string")
                   .option("maxFilesPerTrigger", 1).parquet(src))
-        q = start_bm25_stream(stream, os.path.join(work, "state"),
-                              os.path.join(work, "ckpt"), "doc_id", "text")
+        q = summary.start(BM25, stream, os.path.join(work, "state"),
+                          os.path.join(work, "ckpt"), "doc_id", "text")
         assert q.awaitTermination(300), "bm25 ingest did not finish"
         qdf = spark.createDataFrame(BM25_BATCH_QUERIES,
                                     "qid long, terms array<string>")
@@ -389,8 +390,9 @@ def bm25_takedown_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     those docs were never ingested. Certifies that deletion removes a
     doc from postings AND from every corpus statistic (N, avgdl, df),
     and that compaction's reclaim does not disturb the answer."""
-    from ..streaming.bm25 import (bm25_delete_handler, bm25_topk,
-                                  compact_bm25_state, start_bm25_stream)
+    from ..streaming import summary
+    from ..streaming.bm25 import (BM25, bm25_delete_handler, bm25_topk,
+                                  compact_bm25_state)
 
     docs = (load_tables(spark, sf_dir, ("documents",))["documents"]
             .select("doc_id", "text"))
@@ -401,8 +403,8 @@ def bm25_takedown_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.repartition(3).write.parquet(src)
         stream = (spark.readStream.schema("doc_id long, text string")
                   .option("maxFilesPerTrigger", 1).parquet(src))
-        q = start_bm25_stream(stream, os.path.join(work, "state"),
-                              os.path.join(work, "ckpt"), "doc_id", "text")
+        q = summary.start(BM25, stream, os.path.join(work, "state"),
+                          os.path.join(work, "ckpt"), "doc_id", "text")
         assert q.awaitTermination(300), "bm25 ingest did not finish"
         dels = docs.filter(F.col("doc_id") % 17 == 3).select("doc_id")
         bm25_delete_handler(os.path.join(work, "state"), "doc_id")(dels, 0)
@@ -568,7 +570,8 @@ def phrase_search_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay that re-derives token offsets with unnest WITH ORDINALITY
     and chains idx+1. The query class a bag-of-words index cannot
     answer, served from the SAME state as bm25_topk."""
-    from ..streaming.bm25 import phrase_topk, start_bm25_stream
+    from ..streaming import summary
+    from ..streaming.bm25 import BM25, phrase_topk
 
     docs = (load_tables(spark, sf_dir, ("documents",))["documents"]
             .select("doc_id", "text"))
@@ -579,8 +582,8 @@ def phrase_search_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.repartition(3).write.parquet(src)
         stream = (spark.readStream.schema("doc_id long, text string")
                   .option("maxFilesPerTrigger", 1).parquet(src))
-        q = start_bm25_stream(stream, os.path.join(work, "state"),
-                              os.path.join(work, "ckpt"), "doc_id", "text")
+        q = summary.start(BM25, stream, os.path.join(work, "state"),
+                          os.path.join(work, "ckpt"), "doc_id", "text")
         assert q.awaitTermination(300), "bm25 ingest did not finish"
         out = phrase_topk(spark, os.path.join(work, "state"),
                           ("window", "join"))

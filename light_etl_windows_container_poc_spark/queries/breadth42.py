@@ -743,7 +743,8 @@ def proximity_search_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     token offsets and chains them with a bounded-range join. The query
     class between bag-of-words (bm25_topk) and exact phrase
     (phrase_topk), served from the SAME state as both."""
-    from ..streaming.bm25 import proximity_topk, start_bm25_stream
+    from ..streaming import summary
+    from ..streaming.bm25 import BM25, proximity_topk
 
     docs = (load_tables(spark, sf_dir, ("documents",))["documents"]
             .select("doc_id", "text"))
@@ -754,8 +755,8 @@ def proximity_search_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.repartition(3).write.parquet(src)
         stream = (spark.readStream.schema("doc_id long, text string")
                   .option("maxFilesPerTrigger", 1).parquet(src))
-        q = start_bm25_stream(stream, os.path.join(work, "state"),
-                              os.path.join(work, "ckpt"), "doc_id", "text")
+        q = summary.start(BM25, stream, os.path.join(work, "state"),
+                          os.path.join(work, "ckpt"), "doc_id", "text")
         assert q.awaitTermination(300), "bm25 ingest did not finish"
         out = proximity_topk(spark, os.path.join(work, "state"),
                              ("window", "join"), slop=3)

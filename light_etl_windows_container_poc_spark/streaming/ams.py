@@ -5,81 +5,35 @@ planner consults before committing a 100 TB shuffle, maintained
 incrementally instead of rescanned.
 
 AMS shares Count-Min's strongest streaming property: X_j is LINEAR in
-the rows, so partials merge by plain addition and the streamed state is
+the rows, so partials merge by plain addition, the streamed state is
 CELL-FOR-CELL IDENTICAL to the one-shot batch sketch for any
 micro-batch boundaries (queries/breadth38's certification hashes the
-streamed vector against the batch oracle).
-
-State/replay/compaction contracts are shared with heavy_hitters.py
-(whose module docstring is the full specification): per-batch partial
-vectors land under ``batch_tag=N`` with OVERWRITE (replayed batches
-rewrite, never double-count), readers merge the manifest's active
-compacted generation plus every batch above the subsumed watermark, and
-compaction publishes through the atomically-replaced generation
-manifest. One publication protocol, now six sketch payloads.
+streamed vector against the batch oracle), and compaction is
+answer-INVARIANT. State protocol: streaming/summary.py.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from .heavy_hitters import live_partial_dirs
+from .summary import Summary, partials
 
 _SCHEMA = "j int, x long"
 
 
-def ams_batch_handler(state_dir: str, col: str,
-                      counters: int) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: sketch the micro-batch and land the
-    <= counters-cell partial under its batch_tag."""
+def _build(batch: DataFrame, col: str, counters: int) -> DataFrame:
     from ..operators.sketches import ams_build
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        vec = ams_build(batch.select(col), col, counters)
-        (vec.select(F.col("j").cast("int"), "x")
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_tag={batch_id}")))
-
-    return handle
+    return (ams_build(batch.select(col), col, counters)
+            .select(F.col("j").cast("int"), "x"))
 
 
-def start_ams_stream(stream: DataFrame, state_dir: str,
-                     checkpoint_dir: str, col: str,
-                     counters: int) -> StreamingQuery:
-    return (stream.writeStream
-            .foreachBatch(ams_batch_handler(state_dir, col, counters))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def read_ams(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The merged counter vector over everything ingested so far —
-    cell-identical to a one-shot ams_build over the union of all
-    landed batches (X_j is additive)."""
-    dirs = live_partial_dirs(state_dir)
-    if not dirs:
-        return spark.createDataFrame([], _SCHEMA)
-    paths = [os.path.join(state_dir, d) for d in dirs]
-    return (spark.read.schema(_SCHEMA).parquet(*paths)
+def _merge(spark: SparkSession, state_dir: str,
+           dirs: list[str]) -> DataFrame:
+    return (partials(spark, state_dir, dirs, _SCHEMA)
             .groupBy("j").agg(F.sum("x").cast("long").alias("x")))
 
 
-def compact_ams_state(spark: SparkSession, state_dir: str) -> None:
-    """Fold live partials into one <= counters-cell generation via the
-    shared manifest protocol (heavy_hitters.compact_via_manifest has
-    the crash-safety argument; addition is associative, so compaction
-    is answer-INVARIANT)."""
-    from .heavy_hitters import compact_via_manifest
-
-    def merge(live: list[str]) -> DataFrame:
-        paths = [os.path.join(state_dir, d) for d in live]
-        return (spark.read.schema(_SCHEMA).parquet(*paths)
-                .groupBy("j").agg(F.sum("x").cast("long").alias("x")))
-
-    compact_via_manifest(state_dir, merge)
+# handler/start params: (col, counters); read/compact params: none
+AMS = Summary(_SCHEMA, _build, _merge)

@@ -31,18 +31,15 @@ token, so NULL cannot collide with a real term. Takedown tombstones
 namespace — outside the posting manifest's watermark, so deletes never
 interfere with posting batch ids (see the takedown section).
 
-State/replay/compaction contracts are shared with heavy_hitters.py
-(whose module docstring is the full specification): overwrite-by-
-batch_tag makes crash replays idempotent, and compaction folds live
-partials into one generation via the shared manifest protocol —
-answer-INVARIANT because the merge is a plain union (postings are
-already minimal state; compaction here buys file-count reduction and
-term-clustered row groups, not mass reduction). The compacted
-generation is sorted within partitions by tok so parquet row-group
-statistics prune query-term filters — the scale move that keeps
-query cost proportional to matching postings, not corpus size.
-
-Ninth payload of the generation-manifest protocol.
+State protocol: streaming/summary.py — overwrite-by-batch_tag makes
+crash replays idempotent, and compaction folds live partials into one
+generation via the shared manifest — answer-INVARIANT because the merge
+is a plain union (postings are already minimal state; compaction here
+buys file-count reduction and term-clustered row groups, not mass
+reduction). The compacted generation is sorted within partitions by tok
+so parquet row-group statistics prune query-term filters — the scale
+move that keeps query cost proportional to matching postings, not
+corpus size.
 """
 
 from __future__ import annotations
@@ -52,10 +49,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.texts import words
-from .heavy_hitters import live_partial_dirs
+from .summary import Summary, compact, live_partial_dirs
 
 _SCHEMA = "tok string, doc_id long, tf long, dl long, pos array<int>"
 
@@ -87,29 +83,6 @@ def bm25_partial(batch: DataFrame, id_col: str,
             .unionByName(stat))
 
 
-def bm25_batch_handler(state_dir: str, id_col: str,
-                       text_col: str) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: land the micro-batch's own postings under
-    its batch_tag (overwrite → replay-idempotent)."""
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        (bm25_partial(batch, id_col, text_col)
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_tag={batch_id}")))
-
-    return handle
-
-
-def start_bm25_stream(stream: DataFrame, state_dir: str,
-                      checkpoint_dir: str, id_col: str,
-                      text_col: str) -> StreamingQuery:
-    return (stream.writeStream
-            .foreachBatch(bm25_batch_handler(state_dir, id_col, text_col))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
 _TOMBSTONE_SUBDIR = "_tombstones"
 
 
@@ -118,16 +91,35 @@ def _tombstone_dirs(state_dir: str) -> list[str]:
     own ``_tombstones/`` namespace, NOT under the posting stream's
     batch_tag= namespace: the compaction manifest's watermark covers
     numeric posting batch ids, and a tombstone batch sharing that
-    namespace (as the original 'disjoint manual range' contract had it)
-    would RAISE the watermark past every later posting micro-batch —
-    silently excluding and then sweeping fresh ingest. The separate
-    namespace keeps delete-batch ids (their own checkpointed stream,
-    starting at 0) and posting-batch ids fully independent."""
+    namespace would RAISE the watermark past every later posting
+    micro-batch — silently excluding and then sweeping fresh ingest.
+    The separate namespace keeps delete-batch ids (their own
+    checkpointed stream, starting at 0) and posting-batch ids fully
+    independent."""
     root = os.path.join(state_dir, _TOMBSTONE_SUBDIR)
-    if not os.path.isdir(root):
-        return []
-    return [os.path.join(root, d) for d in sorted(os.listdir(root))
-            if d.startswith("batch_tag=")]
+    return [os.path.join(root, d) for d in live_partial_dirs(root)]
+
+
+def _postings(spark: SparkSession, state_dir: str,
+              dirs: list[str]) -> DataFrame:
+    """The named posting partials plus every landed tombstone row."""
+    paths = [os.path.join(state_dir, d) for d in dirs]
+    paths += _tombstone_dirs(state_dir)
+    if not paths:
+        return spark.createDataFrame([], _SCHEMA)
+    return spark.read.schema(_SCHEMA).parquet(*paths)
+
+
+def _alive_postings(spark: SparkSession, state_dir: str,
+                    dirs: list[str]) -> DataFrame:
+    """The compaction merge: tombstoned docs' postings physically
+    removed, term-sorted within partitions."""
+    return (bm25_alive(_postings(spark, state_dir, dirs))
+            .sortWithinPartitions("tok"))
+
+
+# handler/start params: (id_col, text_col)
+BM25 = Summary(_SCHEMA, bm25_partial, _alive_postings)
 
 
 def read_bm25_postings(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -135,11 +127,7 @@ def read_bm25_postings(spark: SparkSession, state_dir: str) -> DataFrame:
     disjoint-batch contract, cell-identical to `bm25_partial` over the
     union of all landed batches — plus every landed tombstone row (the
     serve paths go through `bm25_alive`, which applies them)."""
-    dirs = [os.path.join(state_dir, d) for d in live_partial_dirs(state_dir)]
-    dirs += _tombstone_dirs(state_dir)
-    if not dirs:
-        return spark.createDataFrame([], _SCHEMA)
-    return spark.read.schema(_SCHEMA).parquet(*dirs)
+    return _postings(spark, state_dir, live_partial_dirs(state_dir))
 
 
 def bm25_topk(spark: SparkSession, state_dir: str, terms: tuple[str, ...],
@@ -188,33 +176,21 @@ def bm25_topk(spark: SparkSession, state_dir: str, terms: tuple[str, ...],
 
 def compact_bm25_state(spark: SparkSession, state_dir: str,
                        drop_tombstones: bool = False) -> None:
-    """Fold live POSTING partials into one generation via the shared
-    manifest protocol (heavy_hitters.compact_via_manifest has the
-    crash-safety argument). The merge reads the landed tombstones and
-    physically removes tombstoned docs' postings (the takedown's
-    storage reclaim) — answer-invariant because serving already
-    excluded them. Tombstone rows live under their own ``_tombstones/``
-    namespace, which the manifest watermark and sweep never touch, so
-    ingest can CONTINUE after a delete + compaction with its
-    checkpointed batch ids intact (the watermark only ever covers
-    posting ids — regression-tested by
+    """Fold live POSTING partials into one generation with the BM25
+    merge, which reads the landed tombstones and physically removes
+    tombstoned docs' postings (the takedown's storage reclaim) —
+    answer-invariant because serving already excluded them. Tombstone
+    rows live under their own ``_tombstones/`` namespace, which the
+    manifest watermark and sweep never touch, so ingest can CONTINUE
+    after a delete + compaction with its checkpointed batch ids intact
+    (the watermark only ever covers posting ids — regression-tested by
     test_ingest_continues_after_delete_and_compaction). Pass
     ``drop_tombstones=True`` to vacuum the tombstone namespace once
     ingest has provably passed the delete frontier; the vacuum runs
     strictly AFTER the compacted generation (which already excludes the
     deleted postings) is published, so a crash between the two steps
-    only leaves harmless tombstones behind. Output is term-sorted
-    within partitions so the compacted generation's parquet row-group
-    stats prune query-term filters."""
-    from .heavy_hitters import compact_via_manifest
-
-    def merge(live: list[str]) -> DataFrame:
-        paths = [os.path.join(state_dir, d) for d in live]
-        paths += _tombstone_dirs(state_dir)
-        idx = spark.read.schema(_SCHEMA).parquet(*paths)
-        return bm25_alive(idx).sortWithinPartitions("tok")
-
-    compact_via_manifest(state_dir, merge)
+    only leaves harmless tombstones behind."""
+    compact(BM25, spark, state_dir)
     if drop_tombstones:
         import shutil
 
@@ -285,12 +261,11 @@ def bm25_topk_batch(spark: SparkSession, state_dir: str,
 # tf = 0, postings have tok set — no collision); it lands under
 # _tombstones/batch_tag=N — its OWN namespace with its own (delete-
 # stream-checkpointed) batch ids, deliberately OUTSIDE the posting
-# manifest's watermark. Sharing the posting batch_tag namespace (the
-# original 'disjoint manual range' contract) was a silent-data-loss
-# bug: one compaction folding a high delete tag raised the watermark
-# past every later posting micro-batch, excluding and then sweeping
-# fresh ingest. Overwrite-by-tag keeps delete replays idempotent
-# exactly as before. Serving anti-joins the (tiny, broadcastable)
+# manifest's watermark. Sharing the posting batch_tag namespace would
+# lose data silently: one compaction folding a high delete tag would
+# raise the watermark past every later posting micro-batch, excluding
+# and then sweeping fresh ingest. Overwrite-by-tag keeps delete replays
+# idempotent. Serving anti-joins the (tiny, broadcastable)
 # tombstoned-id set; corpus stats (N, avgdl, df) exclude deleted docs,
 # so the served result equals a batch build over the corpus MINUS the
 # deletions (pytest-certified). Compaction physically removes the

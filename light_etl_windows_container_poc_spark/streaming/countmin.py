@@ -4,82 +4,34 @@ source via foreachBatch — the point-query-frequency complement to
 streaming/heavy_hitters.py, with one stronger property: CM's merge is
 PLAIN ADDITION, so the streamed state is not merely guarantee-
 equivalent to the batch sketch, it is CELL-FOR-CELL IDENTICAL to it for
-any micro-batch boundaries. queries/breadth32's certification exploits
-that: the streamed grid answers the SAME oracle SQL as the batch query.
-
-State/replay/compaction contracts are shared with heavy_hitters.py
-(whose module docstring is the full specification): per-batch partial
-grids land under ``batch_tag=N`` with OVERWRITE (replayed batches
-rewrite, never double-count), readers merge the manifest's active
-compacted generation plus every batch above the subsumed watermark, and
-compaction publishes through the atomically-replaced generation
-manifest so no crash window loses or double-counts mass. The manifest
-helpers are imported from heavy_hitters — one publication protocol,
-two sketch payloads.
+any micro-batch boundaries, and compaction is answer-INVARIANT (addition
+is associative). queries/breadth32's certification exploits that: the
+streamed grid answers the SAME oracle SQL as the batch query. State
+protocol: streaming/summary.py.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from .heavy_hitters import live_partial_dirs
+from .summary import Summary, partials
 
 _SCHEMA = "seed int, bucket long, cnt long"
 
 
-def countmin_batch_handler(state_dir: str, col: str, depth: int,
-                           width: int) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: grid the micro-batch and land the
-    <= depth*width-cell partial under its batch_tag."""
+def _build(batch: DataFrame, col: str, depth: int, width: int) -> DataFrame:
     from ..operators.sketches import cm_build
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        grid = cm_build(batch.select(col), col, depth, width)
-        (grid.select(F.col("seed").cast("int"), "bucket", "cnt")
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_tag={batch_id}")))
-
-    return handle
+    return (cm_build(batch.select(col), col, depth, width)
+            .select(F.col("seed").cast("int"), "bucket", "cnt"))
 
 
-def start_countmin_stream(stream: DataFrame, state_dir: str,
-                          checkpoint_dir: str, col: str, depth: int,
-                          width: int) -> StreamingQuery:
-    return (stream.writeStream
-            .foreachBatch(countmin_batch_handler(state_dir, col,
-                                                 depth, width))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def read_countmin(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The merged grid over everything ingested so far — cell-identical
-    to a one-shot cm_build over the union of all landed batches."""
-    dirs = live_partial_dirs(state_dir)
-    if not dirs:
-        return spark.createDataFrame([], _SCHEMA)
-    paths = [os.path.join(state_dir, d) for d in dirs]
-    return (spark.read.schema(_SCHEMA).parquet(*paths)
+def _merge(spark: SparkSession, state_dir: str,
+           dirs: list[str]) -> DataFrame:
+    return (partials(spark, state_dir, dirs, _SCHEMA)
             .groupBy("seed", "bucket").agg(F.sum("cnt").alias("cnt")))
 
 
-def compact_countmin_state(spark: SparkSession, state_dir: str) -> None:
-    """Fold live partials into one <= depth*width-cell generation via
-    the shared manifest protocol (heavy_hitters.compact_via_manifest
-    has the crash-safety argument; addition is associative, so
-    compaction is answer-INVARIANT here, not just
-    guarantee-invariant)."""
-    from .heavy_hitters import compact_via_manifest
-
-    def merge(live: list[str]) -> DataFrame:
-        paths = [os.path.join(state_dir, d) for d in live]
-        return (spark.read.schema(_SCHEMA).parquet(*paths)
-                .groupBy("seed", "bucket").agg(F.sum("cnt").alias("cnt")))
-
-    compact_via_manifest(state_dir, merge)
+# handler/start params: (col, depth, width); read/compact params: none
+COUNTMIN = Summary(_SCHEMA, _build, _merge)

@@ -4,202 +4,37 @@ source via foreachBatch — the frequency-monitoring loop a 100 TB
 ingest runs continuously ("which domains/tokens dominate today's
 arrivals") without ever keeping |distinct| state.
 
-State shape: each micro-batch writes its <= partitions*k-row partial
-summary to ``state_dir/batch_tag=N/`` with OVERWRITE — replaying a
-crashed batch rewrites its partition byte-for-byte instead of
-double-counting (the per-batch-directory replay contract of
-streaming/incremental_dedup.py). Queries merge all partials with the
-mergeable-summaries rule at read time; ``compact_state`` folds history
-into a single <= k-row summary (storage sweep — the merge is
-associative, so compaction cannot change any downstream answer's
-guarantees). The MG bounds (est <= true, deficit <= n/(k+1),
+Each micro-batch lands its <= partitions*k-row partial summary; the
+merge is the mergeable-summaries rule, folding partials into one
+<= k-row summary. The MG bounds (est <= true, deficit <= n/(k+1),
 heavy => present) hold for ANY merge tree over the partials, which is
-what makes the read-time merge and the compacted form
-interchangeable.
-
-Compaction crash-safety (generation manifest): the folded summary
-lands under ``batch_tag=compacted_G`` and ``_compact_manifest.json``
-is the single atomically-replaced publication point — it names the
-ACTIVE compacted generation and the subsumed-batch WATERMARK (every
-batch id <= W is folded into it; ids are monotonic, so the manifest
-stays O(1) forever). Readers take the active generation plus every
-batch tag above the watermark and
-ignore unpublished compacted dirs, so every crash window is safe: the
-old partials are never deleted before the manifest that replaces them
-is live, and the double-count window (new summary visible alongside
-the partials it folded) is closed by the subsume list rather than by
-deletion ordering. A replayed subsumed batch re-lands its partial but
-stays excluded — its mass is already in the active summary.
+what makes the read-time merge and the compacted form interchangeable
+(compaction cannot change any downstream answer's guarantees). State
+protocol: streaming/summary.py.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+
+from .summary import Summary, partials
 
 _SCHEMA = "token string, est long"
 
 
-def heavy_hitters_batch_handler(state_dir: str, col: str, k: int,
-                                ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: summarize the micro-batch with k MG
-    counters per partition and land the partial under its batch_tag."""
+def _build(batch: DataFrame, col: str, k: int) -> DataFrame:
     from ..operators.sketches import mg_partial_summaries
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        part = mg_partial_summaries(batch.select(col), col, k)
-        (part.write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_tag={batch_id}")))
-
-    return handle
+    return mg_partial_summaries(batch.select(col), col, k)
 
 
-def start_heavy_hitters_stream(stream: DataFrame, state_dir: str,
-                               checkpoint_dir: str, col: str, k: int,
-                               ) -> StreamingQuery:
-    return (stream.writeStream
-            .foreachBatch(heavy_hitters_batch_handler(state_dir, col, k))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-_MANIFEST = "_compact_manifest.json"
-
-
-def _read_manifest(state_dir: str) -> dict:
-    import json
-
-    path = os.path.join(state_dir, _MANIFEST)
-    if not os.path.exists(path):
-        return {"active": None, "max_subsumed_batch": -1}
-    with open(path) as f:
-        return json.load(f)
-
-
-def live_partial_dirs(state_dir: str) -> list[str]:
-    """The partial directories a reader should merge: the manifest's
-    active compacted generation (if any) plus every batch tag ABOVE the
-    subsumed watermark. Structured Streaming batch ids are monotonic,
-    so "every id <= W is folded into the active summary" is exact and
-    keeps the manifest O(1) across any number of compactions — a
-    subsumed-id LIST would grow with ingest history and a later
-    generation's list would have to carry every earlier one forward.
-    Unpublished compacted dirs (renamed in but crashed before the
-    manifest swap) are ignored — their mass is still fully present in
-    the partials they would have replaced."""
-    man = _read_manifest(state_dir)
-    watermark = man["max_subsumed_batch"]
-    out = []
-    for d in sorted(os.listdir(state_dir)):
-        if not d.startswith("batch_tag="):
-            continue
-        tag = d.split("=", 1)[1]
-        if tag.startswith("compacted"):
-            if d == man["active"]:
-                out.append(d)
-        elif int(tag) > watermark:
-            out.append(d)
-    return out
-
-
-def read_heavy_hitters(spark: SparkSession, state_dir: str,
-                       k: int) -> DataFrame:
-    """Global <= k-row summary over everything ingested so far."""
+def _merge(spark: SparkSession, state_dir: str, dirs: list[str],
+           k: int) -> DataFrame:
     from ..operators.sketches import mg_merge
 
-    dirs = live_partial_dirs(state_dir)
-    if not dirs:
-        return spark.createDataFrame([], _SCHEMA)
-    paths = [os.path.join(state_dir, d) for d in dirs]
-    partials = (spark.read.schema(_SCHEMA).parquet(*paths)
-                .select("token", "est"))
-    return mg_merge(partials, k)
+    return mg_merge(partials(spark, state_dir, dirs, _SCHEMA)
+                    .select("token", "est"), k)
 
 
-def compact_via_manifest(state_dir: str, merge_live) -> None:
-    """The ONE generation-manifest compaction sequence every sketch
-    payload shares (heavy-hitters/Count-Min/histogram/HLL/qsketch/AMS/
-    KMV/reservoir differ only in how partials merge, so the merge is
-    the single injected step: ``merge_live(live_dirs) -> DataFrame``
-    is computed from the passed SNAPSHOT of live dir names, never a
-    re-listing — a batch landing while the merge runs must stay out of
-    this generation or it would be counted both in the summary and as
-    a live partial).
-
-    Crash-safe ordering — no step deletes data that is not yet
-    replaced by a PUBLISHED equivalent:
-
-    1. merge the live partials into ``_compact_staging`` (invisible);
-    2. rename staging to ``batch_tag=compacted_{G+1}`` — still ignored
-       by readers because the manifest does not name it;
-    3. atomically replace the manifest (tmp + ``os.replace``) naming
-       the new generation active and raising the subsumed-batch
-       watermark over every folded id — the single publication point;
-    4. only then delete the subsumed dirs (storage sweep; readers
-       already skip them). The sweep removes every numeric batch_tag
-       at or below the NEW watermark — not just the snapshot — so a
-       crash-replayed batch that rewrote an already-subsumed tag (its
-       dir is invisible to readers but was previously orphaned on
-       disk forever) is reclaimed here too.
-
-    A crash at any point leaves a state whose read-time merge equals
-    the pre- or post-compaction summary exactly; re-running the
-    compactor sweeps any orphan staging/unpublished dirs."""
-    import json
-    import shutil
-
-    live = live_partial_dirs(state_dir)
-    if not live:
-        return
-    man = _read_manifest(state_dir)
-    gen = 0
-    if man["active"]:
-        gen = int(man["active"].rsplit("_", 1)[1])
-    new_tag = f"batch_tag=compacted_{gen + 1}"
-
-    merged = merge_live(live)
-    staged = os.path.join(state_dir, "_compact_staging")
-    merged.write.mode("overwrite").parquet(staged)
-
-    # orphan from a crashed previous attempt at this generation
-    shutil.rmtree(os.path.join(state_dir, new_tag), ignore_errors=True)
-    os.rename(staged, os.path.join(state_dir, new_tag))
-
-    batch_ids = [int(d.split("=", 1)[1]) for d in live
-                 if not d.split("=", 1)[1].startswith("compacted")]
-    watermark = max([man["max_subsumed_batch"], *batch_ids])
-    tmp = os.path.join(state_dir, _MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump({"active": new_tag, "max_subsumed_batch": watermark}, f)
-    os.replace(tmp, os.path.join(state_dir, _MANIFEST))
-
-    old_active = man["active"]
-    for d in sorted(os.listdir(state_dir)):
-        if not d.startswith("batch_tag="):
-            continue
-        tag = d.split("=", 1)[1]
-        if tag.startswith("compacted"):
-            if d == old_active:  # replaced generation
-                shutil.rmtree(os.path.join(state_dir, d),
-                              ignore_errors=True)
-        elif int(tag) <= watermark:  # subsumed + crash-replay orphans
-            shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
-
-
-def compact_state(spark: SparkSession, state_dir: str, k: int) -> None:
-    """Fold the live partials into one <= k-row summary generation via
-    the shared ``compact_via_manifest`` sequence (whose docstring is
-    the crash-safety specification)."""
-    from ..operators.sketches import mg_merge
-
-    def merge(live: list[str]) -> DataFrame:
-        paths = [os.path.join(state_dir, d) for d in live]
-        return mg_merge(spark.read.schema(_SCHEMA).parquet(*paths)
-                        .select("token", "est"), k)
-
-    compact_via_manifest(state_dir, merge)
+# handler/start params: (col, k); read/compact params: (k)
+HEAVY_HITTERS = Summary(_SCHEMA, _build, _merge)

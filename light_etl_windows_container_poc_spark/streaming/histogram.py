@@ -1,76 +1,45 @@
 """Streaming fixed-width histogram maintenance — the quantile payload
-of the batch_tag/manifest state protocol (streaming/heavy_hitters.py is
-the full specification; streaming/countmin.py is the second payload).
+of the shared state protocol (streaming/summary.py).
 
 Bins are unbounded integer keys (cents div width) — no domain has to be
 known up front, the bin relation just grows with the observed range —
 and merge is PLAIN ADDITION, so like Count-Min the streamed state is
 CELL-IDENTICAL to the one-shot batch histogram for any micro-batch
-boundaries. Quantile answers read off the merged histogram with a
-deterministic guarantee: the k-th smallest value provably lies inside
-the first bin whose cumulative count reaches k, so every estimate is
-exact to one bin width. queries/breadth34's certification hashes the
-streamed estimates, the exact order statistics, and that containment
-flag in one relation.
+boundaries, and compaction is answer-INVARIANT. Quantile answers read
+off the merged histogram with a deterministic guarantee: the k-th
+smallest value provably lies inside the first bin whose cumulative
+count reaches k, so every estimate is exact to one bin width.
+queries/breadth34's certification hashes the streamed estimates, the
+exact order statistics, and that containment flag in one relation.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from .heavy_hitters import live_partial_dirs
+from .summary import Summary, partials
 
 _SCHEMA = "bin long, cnt long"
 
 
-def histogram_batch_handler(state_dir: str, cents_col: str,
-                            bin_width: int,
-                            ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: bin the micro-batch and land the partial
-    under its batch_tag (overwrite = replay-idempotent)."""
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        # exact BIGINT bin assignment (div, not double division + cast).
-        # Sign semantics verified for the FULL integer domain, not just
-        # the non-negative testdata: Spark's `div` truncates toward zero
-        # and DuckDB's INTEGER `//` does too (-5 // 100 = 0, -105 // 100
-        # = -1 on duckdb 1.0.0 — `//` floors only for DOUBLE operands),
-        # so the certification oracle's bins match for negative cents as
-        # well; locked by test_histogram_bins_agree_on_negative_cents.
-        h = (batch.select(F.expr(f"{cents_col} div {bin_width}")
-                          .alias("bin"))
-             .groupBy("bin").agg(F.count(F.lit(1)).alias("cnt")))
-        (h.write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_tag={batch_id}")))
-
-    return handle
+def _build(batch: DataFrame, cents_col: str, bin_width: int) -> DataFrame:
+    # exact BIGINT bin assignment (div, not double division + cast).
+    # Sign semantics verified for the FULL integer domain, not just
+    # the non-negative testdata: Spark's `div` truncates toward zero
+    # and DuckDB's INTEGER `//` does too (-5 // 100 = 0, -105 // 100
+    # = -1 on duckdb 1.0.0 — `//` floors only for DOUBLE operands),
+    # so the certification oracle's bins match for negative cents as
+    # well; locked by test_histogram_bins_agree_on_negative_cents.
+    return (batch.select(F.expr(f"{cents_col} div {bin_width}").alias("bin"))
+            .groupBy("bin").agg(F.count(F.lit(1)).alias("cnt")))
 
 
-def start_histogram_stream(stream: DataFrame, state_dir: str,
-                           checkpoint_dir: str, cents_col: str,
-                           bin_width: int) -> StreamingQuery:
-    return (stream.writeStream
-            .foreachBatch(histogram_batch_handler(state_dir, cents_col,
-                                                  bin_width))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def read_histogram(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The merged (bin, cnt) histogram over everything ingested so far
-    — cell-identical to a one-shot build over the union of batches.
-    Compaction, when state accumulates, is
-    streaming/countmin.compact_countmin_state's generation-manifest
-    protocol verbatim (addition merge, answer-invariant)."""
-    dirs = live_partial_dirs(state_dir)
-    if not dirs:
-        return spark.createDataFrame([], _SCHEMA)
-    paths = [os.path.join(state_dir, d) for d in dirs]
-    return (spark.read.schema(_SCHEMA).parquet(*paths)
+def _merge(spark: SparkSession, state_dir: str,
+           dirs: list[str]) -> DataFrame:
+    return (partials(spark, state_dir, dirs, _SCHEMA)
             .groupBy("bin").agg(F.sum("cnt").alias("cnt")))
+
+
+# handler/start params: (cents_col, bin_width); read/compact params: none
+HISTOGRAM = Summary(_SCHEMA, _build, _merge)

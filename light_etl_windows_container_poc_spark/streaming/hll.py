@@ -1,18 +1,16 @@
-"""Streaming HyperLogLog register maintenance — the FOURTH payload of
-the batch_tag/manifest state protocol (streaming/heavy_hitters.py is
-the full specification; countmin.py and histogram.py are the additive
-payloads).
+"""Streaming HyperLogLog register maintenance.
 
-Unlike those two, HLL registers merge by MAX, which is idempotent as
-well as commutative/associative — so the streamed state is
-CELL-IDENTICAL to the one-shot batch grid for ANY micro-batch split
-AND any replay, even without the overwrite-per-batch-tag discipline
-(which we keep anyway for protocol uniformity). The register grid is
-the md5-bridge construction queries/breadth36 certifies cell-exact
-against DuckDB: bucket = first 8 md5 hex nibbles mod m, rho = 33 −
-bit_length of the next 8 nibbles (bin() has identical no-leading-zeros
-semantics in Spark and DuckDB; the w = 0 corner maps to 32 in both —
-probability 2⁻³², documented rather than special-cased).
+HLL registers merge by MAX, which is idempotent as well as
+commutative/associative — so the streamed state is CELL-IDENTICAL to
+the one-shot batch grid for ANY micro-batch split AND any replay, even
+without the overwrite-per-batch-tag discipline (which the shared state
+protocol of streaming/summary.py keeps anyway), and compaction is
+answer-INVARIANT. The register grid is the md5-bridge construction
+queries/breadth36 certifies cell-exact against DuckDB: bucket = first 8
+md5 hex nibbles mod m, rho = 33 − bit_length of the next 8 nibbles
+(bin() has identical no-leading-zeros semantics in Spark and DuckDB;
+the w = 0 corner maps to 32 in both — probability 2⁻³², documented
+rather than special-cased).
 
 Scale: each micro-batch reduces to ≤ m rows before any write
 (map-side max combine), the state directory holds n_batches·m tiny
@@ -22,14 +20,10 @@ proportional to the stream.
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from .heavy_hitters import live_partial_dirs
+from .summary import Summary, partials
 
 _SCHEMA = "bucket long, reg long"
 
@@ -52,38 +46,11 @@ def hll_grid(df: DataFrame, key_col: str, m: int) -> DataFrame:
             .groupBy("bucket").agg(F.max("rho").alias("reg")))
 
 
-def hll_batch_handler(state_dir: str, key_col: str, m: int,
-                      ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: reduce the micro-batch to its ≤ m-row
-    register grid and land it under its batch_tag (overwrite =
-    replay-idempotent; max-merge would forgive even an append)."""
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        (hll_grid(batch, key_col, m).write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_tag={batch_id}")))
-
-    return handle
-
-
-def start_hll_stream(stream: DataFrame, state_dir: str,
-                     checkpoint_dir: str, key_col: str,
-                     m: int) -> StreamingQuery:
-    return (stream.writeStream
-            .foreachBatch(hll_batch_handler(state_dir, key_col, m))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def read_hll(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The MAX-merged (bucket, reg) grid over everything ingested so
-    far — cell-identical to a one-shot grid over the union of batches
-    (max is associative, commutative, AND idempotent). Compaction, when
-    state accumulates, is countmin.compact_countmin_state's
-    generation-manifest protocol with max in place of sum."""
-    dirs = live_partial_dirs(state_dir)
-    if not dirs:
-        return spark.createDataFrame([], _SCHEMA)
-    paths = [os.path.join(state_dir, d) for d in dirs]
-    return (spark.read.schema(_SCHEMA).parquet(*paths)
+def _merge(spark: SparkSession, state_dir: str,
+           dirs: list[str]) -> DataFrame:
+    return (partials(spark, state_dir, dirs, _SCHEMA)
             .groupBy("bucket").agg(F.max("reg").alias("reg")))
+
+
+# handler/start params: (key_col, m); read/compact params: none
+HLL = Summary(_SCHEMA, hll_grid, _merge)

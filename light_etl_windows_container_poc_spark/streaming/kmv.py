@@ -12,26 +12,18 @@ hashes precede it; each input's hashes are a subset of the union's, so
 fewer than k of ITS hashes precede h and h survives that input's own
 truncation. Hence the read-time merge of per-batch k-smallest partials
 is CELL-FOR-CELL the KMV of the full stream (hashed against the batch
-oracle in queries/breadth38), and — state being a SET of hashes —
-re-applying a batch is structurally idempotent even before the
-overwrite-by-batch_tag protocol makes replay safe mechanically.
-
-State/replay/compaction contracts are shared with heavy_hitters.py
-(whose module docstring is the full specification); compaction folds
-live partials into one <= k-row generation and is answer-INVARIANT by
-the theorem above. One publication protocol, now seven sketch payloads.
+oracle in queries/breadth38), compaction into one <= k-row generation
+is answer-INVARIANT, and — state being a SET of hashes — re-applying a
+batch is structurally idempotent even before the overwrite-by-batch_tag
+protocol (streaming/summary.py) makes replay safe mechanically.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from .heavy_hitters import live_partial_dirs
+from .summary import Summary, partials
 
 _SCHEMA = "h string"
 
@@ -44,52 +36,11 @@ def kmv_of(df: DataFrame, col: str, k: int) -> DataFrame:
             .distinct().orderBy("h").limit(k))
 
 
-def kmv_batch_handler(state_dir: str, col: str,
-                      k: int) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: land the micro-batch's own <= k-row
-    truncated hash set under its batch_tag."""
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        (kmv_of(batch, col, k)
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_tag={batch_id}")))
-
-    return handle
-
-
-def start_kmv_stream(stream: DataFrame, state_dir: str,
-                     checkpoint_dir: str, col: str,
-                     k: int) -> StreamingQuery:
-    return (stream.writeStream
-            .foreachBatch(kmv_batch_handler(state_dir, col, k))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def read_kmv(spark: SparkSession, state_dir: str, k: int) -> DataFrame:
-    """The merged sketch over everything ingested so far — by the
-    union-then-truncate theorem, cell-identical to kmv_of over the
-    union of all landed batches."""
-    dirs = live_partial_dirs(state_dir)
-    if not dirs:
-        return spark.createDataFrame([], _SCHEMA)
-    paths = [os.path.join(state_dir, d) for d in dirs]
-    return (spark.read.schema(_SCHEMA).parquet(*paths)
+def _merge(spark: SparkSession, state_dir: str, dirs: list[str],
+           k: int) -> DataFrame:
+    return (partials(spark, state_dir, dirs, _SCHEMA)
             .distinct().orderBy("h").limit(k))
 
 
-def compact_kmv_state(spark: SparkSession, state_dir: str,
-                      k: int) -> None:
-    """Fold live partials into one <= k-row generation via the shared
-    manifest protocol (heavy_hitters.compact_via_manifest has the
-    crash-safety argument; union-then-truncate is associative,
-    commutative, and idempotent, so compaction is answer-INVARIANT)."""
-    from .heavy_hitters import compact_via_manifest
-
-    def merge(live: list[str]) -> DataFrame:
-        paths = [os.path.join(state_dir, d) for d in live]
-        return (spark.read.schema(_SCHEMA).parquet(*paths)
-                .distinct().orderBy("h").limit(k))
-
-    compact_via_manifest(state_dir, merge)
+# handler/start params: (col, k); read/compact params: (k)
+KMV = Summary(_SCHEMA, kmv_of, _merge)

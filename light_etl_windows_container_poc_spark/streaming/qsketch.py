@@ -1,7 +1,5 @@
-"""Streaming quantile-sketch maintenance — the FIFTH payload of the
-batch_tag/manifest state protocol (streaming/heavy_hitters.py is the
-full specification; countmin/histogram are the additive payloads, hll
-the idempotent-max one).
+"""Streaming quantile-sketch maintenance over the shared state protocol
+(streaming/summary.py).
 
 Each micro-batch lands its OWN level-sampling sketch
 (operators/qsketch.py: ≤ cap kept cells + the l_star/n_total scalars)
@@ -10,8 +8,12 @@ levels are row-intrinsic, so re-deciding L* over the union of kept
 cells (floored at the per-batch maximum L*) reproduces the one-shot
 batch sketch CELL-FOR-CELL for any micro-batch split (driver-hashed by
 queries/breadth37.py:stream_qsketch_cert, property-tested for splits).
-Overwrite-per-batch-tag makes replays idempotent, the standard
-protocol discipline.
+The merged sketch is EXACTLY sufficient compacted state, not an
+approximation of it: future unions can only RAISE L* (cnt_ge grows
+monotonically), so the kept cells at the current L* plus the
+(l_star, n_total) scalars reproduce every future merge decision —
+compaction is answer-invariant by the same theorem qsketch_merge
+proves.
 
 Scale: per-batch state is ≤ cap rows + one 53-row histogram's worth of
 decision work; the state directory holds n_batches·cap tiny rows; the
@@ -21,56 +23,20 @@ read-time merge aggregates those rows only — never the stream.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from .heavy_hitters import live_partial_dirs
+from .summary import Summary
 
 _SCHEMA = "key long, val long, lvl long, l_star long, n_total long"
 
 
-def qsketch_batch_handler(state_dir: str, key_col: str, val_col: str,
-                          cap: int) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: reduce the micro-batch to its own ≤ cap-row
-    sketch and land it under its batch_tag."""
+def _build(batch: DataFrame, key_col: str, val_col: str,
+           cap: int) -> DataFrame:
     from ..operators.qsketch import qsketch_build
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        (qsketch_build(batch, key_col, val_col, cap)
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_tag={batch_id}")))
-
-    return handle
-
-
-def start_qsketch_stream(stream: DataFrame, state_dir: str,
-                         checkpoint_dir: str, key_col: str, val_col: str,
-                         cap: int) -> StreamingQuery:
-    return (stream.writeStream
-            .foreachBatch(qsketch_batch_handler(state_dir, key_col,
-                                                val_col, cap))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def compact_qsketch_state(spark: SparkSession, state_dir: str,
-                          cap: int) -> None:
-    """Fold live partials into one ≤ cap-row generation via the shared
-    manifest protocol (heavy_hitters.compact_state has the crash-safety
-    argument). The merged sketch is EXACTLY sufficient compacted state,
-    not an approximation of it: future unions can only RAISE L* (cnt_ge
-    grows monotonically), so the kept cells at the current L* plus the
-    (l_star, n_total) scalars reproduce every future merge decision —
-    compaction is answer-invariant here like the additive payloads,
-    by the same theorem qsketch_merge proves."""
-    from .heavy_hitters import compact_via_manifest
-
-    compact_via_manifest(
-        state_dir, lambda live: _merged_over(spark, state_dir, live, cap))
+    return qsketch_build(batch, key_col, val_col, cap)
 
 
 def _merged_over(spark: SparkSession, state_dir: str, dirs: list[str],
@@ -92,12 +58,6 @@ def _merged_over(spark: SparkSession, state_dir: str, dirs: list[str],
     return merge_sketch_parts(u.select("key", "val", "lvl"), scal, cap)
 
 
-def read_qsketch(spark: SparkSession, state_dir: str,
-                 cap: int) -> DataFrame:
-    """The merged sketch over everything ingested so far — the exact
-    qsketch_merge over the live batch partials. Returns
-    qsketch_build's shape: (key, val, lvl, l_star, n_total)."""
-    dirs = live_partial_dirs(state_dir)
-    if not dirs:
-        return spark.createDataFrame([], _SCHEMA)
-    return _merged_over(spark, state_dir, dirs, cap)
+# handler/start params: (key_col, val_col, cap); read/compact: (cap).
+# Returns qsketch_build's shape: (key, val, lvl, l_star, n_total).
+QSKETCH = Summary(_SCHEMA, _build, _merged_over)

@@ -16,24 +16,17 @@ makes KMV's merge exact applies verbatim:
 hence by fewer than k rows of its own batch, so it survives its batch's
 truncation. Per-batch ≤ k-row partials therefore merge at read time
 into CELL-FOR-CELL the one-shot sample (hashed against the direct
-weighted_sample oracle in queries/breadth39), and replay is
-structurally idempotent on top of the overwrite-by-batch_tag protocol.
-
-State/replay/compaction contracts are shared with heavy_hitters.py
-(whose module docstring is the full specification). One publication
-protocol, now eight sketch payloads.
+weighted_sample oracle in queries/breadth39), compaction is
+answer-INVARIANT, and replay is structurally idempotent on top of the
+overwrite-by-batch_tag protocol (streaming/summary.py).
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from .heavy_hitters import live_partial_dirs
+from .summary import Summary, partials
 
 _SCHEMA = "doc_id long, w long, lu_micro long"
 
@@ -61,51 +54,15 @@ def reservoir_topk(cands: DataFrame, k: int) -> DataFrame:
     return cands.orderBy(_priority().desc(), "doc_id").limit(k)
 
 
-def reservoir_batch_handler(state_dir: str,
-                            k: int) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function: land the micro-batch's own ≤ k-row
-    truncated sample under its batch_tag."""
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        (reservoir_topk(reservoir_candidates(batch), k)
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_tag={batch_id}")))
-
-    return handle
+def _build(batch: DataFrame, k: int) -> DataFrame:
+    return reservoir_topk(reservoir_candidates(batch), k)
 
 
-def start_reservoir_stream(stream: DataFrame, state_dir: str,
-                           checkpoint_dir: str, k: int) -> StreamingQuery:
-    return (stream.writeStream
-            .foreachBatch(reservoir_batch_handler(state_dir, k))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+def _merge(spark: SparkSession, state_dir: str, dirs: list[str],
+           k: int) -> DataFrame:
+    return reservoir_topk(
+        partials(spark, state_dir, dirs, _SCHEMA).distinct(), k)
 
 
-def read_reservoir(spark: SparkSession, state_dir: str,
-                   k: int) -> DataFrame:
-    """The merged sample over everything ingested so far — by the
-    top-k subset theorem, cell-identical to the one-shot weighted
-    sample of the union of all landed batches."""
-    dirs = live_partial_dirs(state_dir)
-    if not dirs:
-        return spark.createDataFrame([], _SCHEMA)
-    paths = [os.path.join(state_dir, d) for d in dirs]
-    rows = spark.read.schema(_SCHEMA).parquet(*paths).distinct()
-    return reservoir_topk(rows, k)
-
-
-def compact_reservoir_state(spark: SparkSession, state_dir: str,
-                            k: int) -> None:
-    """Fold live partials into one ≤ k-row generation via the shared
-    manifest protocol (heavy_hitters.compact_via_manifest;
-    answer-invariant by the top-k subset theorem)."""
-    from .heavy_hitters import compact_via_manifest
-
-    def merge(live: list[str]) -> DataFrame:
-        paths = [os.path.join(state_dir, d) for d in live]
-        return reservoir_topk(
-            spark.read.schema(_SCHEMA).parquet(*paths).distinct(), k)
-
-    compact_via_manifest(state_dir, merge)
+# handler/start/read/compact params: (k)
+RESERVOIR = Summary(_SCHEMA, _build, _merge)

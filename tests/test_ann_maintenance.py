@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from light_etl_windows_container_poc_spark.catalog import load_tables
@@ -264,3 +265,37 @@ def test_drift_monitor_triggers_and_resets(spark, sf_dir, tmp_path):
     record_drift_baseline(full, "vec_id", "embedding", idx)
     cleared = drift_check(full, "vec_id", "embedding", idx)
     assert not cleared["needs_refresh"], cleared
+
+
+def test_quantizers_load_once_across_drift_baseline_write(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """Writes that leave the quantizers alone (a drift baseline lands at
+    the index's top level) must not force a reload on the next batch."""
+    from light_etl_windows_container_poc_spark.operators import ann_index
+    from light_etl_windows_container_poc_spark.operators.ann_index import \
+        record_drift_baseline
+
+    emb = _emb(spark, sf_dir)
+    base = emb.filter(F.col("vec_id") < 200)
+    idx = str(tmp_path / "ivfpq")
+    build_ivfpq_index(base, "vec_id", "embedding", idx, n_clusters=4)
+    loads = []
+    real_load = ann_index.load_ivfpq_quantizers
+    monkeypatch.setattr(
+        ann_index, "load_ivfpq_quantizers",
+        lambda s, p: loads.append(p) or real_load(s, p))
+    handler = ann_append_batch_handler(idx)
+    handler(emb.filter((F.col("vec_id") >= 200)
+                       & (F.col("vec_id") < 225)), 0)
+    record_drift_baseline(base, "vec_id", "embedding", idx)
+    handler(emb.filter((F.col("vec_id") >= 225)
+                       & (F.col("vec_id") < 250)), 1)
+    assert loads == [idx]
+    assert spark.read.parquet(os.path.join(idx, "codes")).count() == 250
+
+
+def test_missing_index_raises_clear_error(spark, tmp_path):
+    handler = ann_append_batch_handler(str(tmp_path / "absent"))
+    batch = spark.createDataFrame([(1, [0.0, 1.0])], SCHEMA)
+    with pytest.raises(FileNotFoundError, match="no IVF-PQ index"):
+        handler(batch, 0)

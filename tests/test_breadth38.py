@@ -15,19 +15,9 @@ from light_etl_windows_container_poc_spark.operators.sketches import (
     ams_build,
     ams_f2_estimate,
 )
-from light_etl_windows_container_poc_spark.streaming.ams import (
-    ams_batch_handler,
-    compact_ams_state,
-    read_ams,
-    start_ams_stream,
-)
-from light_etl_windows_container_poc_spark.streaming.kmv import (
-    compact_kmv_state,
-    kmv_batch_handler,
-    kmv_of,
-    read_kmv,
-    start_kmv_stream,
-)
+from light_etl_windows_container_poc_spark.streaming import summary
+from light_etl_windows_container_poc_spark.streaming.ams import AMS
+from light_etl_windows_container_poc_spark.streaming.kmv import KMV, kmv_of
 
 SCHEMA = "token string"
 
@@ -110,14 +100,14 @@ def test_stream_ams_equals_batch_and_replay_idempotent(spark, tmp_path):
     state = str(tmp_path / "state")
     s = (spark.readStream.schema(SCHEMA)
          .option("maxFilesPerTrigger", 1).json(str(src)))
-    start_ams_stream(s, state, str(tmp_path / "ckpt"), "token", 16
-                     ).awaitTermination(120)
-    streamed = _vec(read_ams(spark, state))
+    summary.start(AMS, s, state, str(tmp_path / "ckpt"), "token", 16
+                  ).awaitTermination(120)
+    streamed = _vec(summary.read(AMS, spark, state))
     batch = _vec(ams_build(_df(spark, rows), "token", 16))
     assert streamed == batch
     # crash-replay batch 0: overwrite-by-tag keeps the state identical
-    ams_batch_handler(state, "token", 16)(_df(spark, b0), 0)
-    assert _vec(read_ams(spark, state)) == batch
+    summary.batch_handler(AMS, state, "token", 16)(_df(spark, b0), 0)
+    assert _vec(summary.read(AMS, spark, state)) == batch
 
 
 def test_ams_compaction_is_answer_invariant_and_append_safe(spark,
@@ -126,15 +116,15 @@ def test_ams_compaction_is_answer_invariant_and_append_safe(spark,
     state = str(tmp_path / "state")
     s = (spark.readStream.schema(SCHEMA)
          .option("maxFilesPerTrigger", 1).json(str(src)))
-    start_ams_stream(s, state, str(tmp_path / "ckpt"), "token", 16
-                     ).awaitTermination(120)
-    before = _vec(read_ams(spark, state))
-    compact_ams_state(spark, state)
-    assert _vec(read_ams(spark, state)) == before
+    summary.start(AMS, s, state, str(tmp_path / "ckpt"), "token", 16
+                  ).awaitTermination(120)
+    before = _vec(summary.read(AMS, spark, state))
+    summary.compact(AMS, spark, state)
+    assert _vec(summary.read(AMS, spark, state)) == before
     # post-compaction batch lands above the watermark and is counted
     extra = ["hot"] * 7 + ["new"]
-    ams_batch_handler(state, "token", 16)(_df(spark, extra), 99)
-    assert _vec(read_ams(spark, state)) == _vec(
+    summary.batch_handler(AMS, state, "token", 16)(_df(spark, extra), 99)
+    assert _vec(summary.read(AMS, spark, state)) == _vec(
         ams_build(_df(spark, rows + extra), "token", 16))
 
 
@@ -162,13 +152,13 @@ def test_stream_kmv_equals_batch_and_replay_idempotent(spark, tmp_path):
     k = 8
     s = (spark.readStream.schema(SCHEMA)
          .option("maxFilesPerTrigger", 1).json(str(src)))
-    start_kmv_stream(s, state, str(tmp_path / "ckpt"), "token", k
-                     ).awaitTermination(120)
-    streamed = _hashes(read_kmv(spark, state, k))
+    summary.start(KMV, s, state, str(tmp_path / "ckpt"), "token", k
+                  ).awaitTermination(120)
+    streamed = _hashes(summary.read(KMV, spark, state, k))
     batch = _hashes(kmv_of(_df(spark, rows), "token", k))
     assert streamed == batch
-    kmv_batch_handler(state, "token", k)(_df(spark, b0), 0)
-    assert _hashes(read_kmv(spark, state, k)) == batch
+    summary.batch_handler(KMV, state, "token", k)(_df(spark, b0), 0)
+    assert _hashes(summary.read(KMV, spark, state, k)) == batch
 
 
 def test_kmv_compaction_is_answer_invariant_and_append_safe(spark,
@@ -178,15 +168,15 @@ def test_kmv_compaction_is_answer_invariant_and_append_safe(spark,
     k = 8
     s = (spark.readStream.schema(SCHEMA)
          .option("maxFilesPerTrigger", 1).json(str(src)))
-    start_kmv_stream(s, state, str(tmp_path / "ckpt"), "token", k
-                     ).awaitTermination(120)
-    before = _hashes(read_kmv(spark, state, k))
-    compact_kmv_state(spark, state, k)
-    assert _hashes(read_kmv(spark, state, k)) == before
+    summary.start(KMV, s, state, str(tmp_path / "ckpt"), "token", k
+                  ).awaitTermination(120)
+    before = _hashes(summary.read(KMV, spark, state, k))
+    summary.compact(KMV, spark, state, k)
+    assert _hashes(summary.read(KMV, spark, state, k)) == before
     # a later batch with smaller hashes displaces cells correctly
     extra = [f"z{i}" for i in range(200)]  # 200 fresh keys
-    kmv_batch_handler(state, "token", k)(_df(spark, extra), 99)
-    assert _hashes(read_kmv(spark, state, k)) == _hashes(
+    summary.batch_handler(KMV, state, "token", k)(_df(spark, extra), 99)
+    assert _hashes(summary.read(KMV, spark, state, k)) == _hashes(
         kmv_of(_df(spark, rows + extra), "token", k))
 
 
@@ -217,17 +207,17 @@ def test_compaction_sweeps_crash_replayed_subsumed_batch(spark, tmp_path):
     state = str(tmp_path / "state")
     s = (spark.readStream.schema(SCHEMA)
          .option("maxFilesPerTrigger", 1).json(str(src)))
-    start_ams_stream(s, state, str(tmp_path / "ckpt"), "token", 16
-                     ).awaitTermination(120)
-    compact_ams_state(spark, state)  # watermark now covers batch 0/1
-    answer = _vec(read_ams(spark, state))
+    summary.start(AMS, s, state, str(tmp_path / "ckpt"), "token", 16
+                  ).awaitTermination(120)
+    summary.compact(AMS, spark, state)  # watermark now covers batch 0/1
+    answer = _vec(summary.read(AMS, spark, state))
     # crash-replay batch 0 AFTER compaction: orphan dir below watermark
-    ams_batch_handler(state, "token", 16)(_df(spark, b0), 0)
+    summary.batch_handler(AMS, state, "token", 16)(_df(spark, b0), 0)
     assert os.path.isdir(os.path.join(state, "batch_tag=0"))
-    assert _vec(read_ams(spark, state)) == answer  # readers ignore it
+    assert _vec(summary.read(AMS, spark, state)) == answer  # readers ignore it
     # a real new batch + the next compaction sweeps the orphan
-    ams_batch_handler(state, "token", 16)(_df(spark, ["zz"]), 99)
-    compact_ams_state(spark, state)
+    summary.batch_handler(AMS, state, "token", 16)(_df(spark, ["zz"]), 99)
+    summary.compact(AMS, spark, state)
     assert not os.path.isdir(os.path.join(state, "batch_tag=0"))
     expect = _vec(ams_build(_df(spark, rows + ["zz"]), "token", 16))
-    assert _vec(read_ams(spark, state)) == expect
+    assert _vec(summary.read(AMS, spark, state)) == expect

@@ -9,13 +9,11 @@ import os
 
 from pyspark.sql import functions as F
 
+from light_etl_windows_container_poc_spark.streaming import summary
 from light_etl_windows_container_poc_spark.streaming.reservoir import (
-    compact_reservoir_state,
-    read_reservoir,
-    reservoir_batch_handler,
+    RESERVOIR,
     reservoir_candidates,
     reservoir_topk,
-    start_reservoir_stream,
 )
 
 SCHEMA = "doc_id long, text string"
@@ -79,14 +77,14 @@ def test_stream_reservoir_equals_batch_and_replay(spark, tmp_path):
     state = str(tmp_path / "state")
     s = (spark.readStream.schema(SCHEMA)
          .option("maxFilesPerTrigger", 1).parquet(str(dst)))
-    start_reservoir_stream(s, state, str(tmp_path / "ckpt"), k
-                           ).awaitTermination(120)
+    summary.start(RESERVOIR, s, state, str(tmp_path / "ckpt"), k
+                  ).awaitTermination(120)
     batch = _rows(reservoir_topk(
         reservoir_candidates(_docs(spark, docs)), k))
-    assert _rows(read_reservoir(spark, state, k)) == batch
+    assert _rows(summary.read(RESERVOIR, spark, state, k)) == batch
     # crash-replay batch 0
-    reservoir_batch_handler(state, k)(_docs(spark, b0), 0)
-    assert _rows(read_reservoir(spark, state, k)) == batch
+    summary.batch_handler(RESERVOIR, state, k)(_docs(spark, b0), 0)
+    assert _rows(summary.read(RESERVOIR, spark, state, k)) == batch
 
 
 def test_reservoir_compaction_invariant_and_append_safe(spark, tmp_path):
@@ -96,15 +94,15 @@ def test_reservoir_compaction_invariant_and_append_safe(spark, tmp_path):
     state = str(tmp_path / "state")
     s = (spark.readStream.schema(SCHEMA)
          .option("maxFilesPerTrigger", 1).parquet(str(dst)))
-    start_reservoir_stream(s, state, str(tmp_path / "ckpt"), k
-                           ).awaitTermination(120)
-    before = _rows(read_reservoir(spark, state, k))
-    compact_reservoir_state(spark, state, k)
-    assert _rows(read_reservoir(spark, state, k)) == before
+    summary.start(RESERVOIR, s, state, str(tmp_path / "ckpt"), k
+                  ).awaitTermination(120)
+    before = _rows(summary.read(RESERVOIR, spark, state, k))
+    summary.compact(RESERVOIR, spark, state, k)
+    assert _rows(summary.read(RESERVOIR, spark, state, k)) == before
     # high-priority newcomers displace incumbents after compaction
     extra = [(1000 + i, 1) for i in range(30)]  # tiny w → high priority
-    reservoir_batch_handler(state, k)(_docs(spark, extra), 99)
-    assert _rows(read_reservoir(spark, state, k)) == _rows(
+    summary.batch_handler(RESERVOIR, state, k)(_docs(spark, extra), 99)
+    assert _rows(summary.read(RESERVOIR, spark, state, k)) == _rows(
         reservoir_topk(reservoir_candidates(
             _docs(spark, docs + extra)), k))
 

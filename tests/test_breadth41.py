@@ -11,16 +11,13 @@ import os
 from pyspark.sql import functions as F
 
 from light_etl_windows_container_poc_spark.queries.breadth14 import bm25_search
+from light_etl_windows_container_poc_spark.streaming import summary
 from light_etl_windows_container_poc_spark.streaming.bm25 import (
-    bm25_batch_handler,
+    BM25,
     bm25_partial,
     bm25_topk,
     compact_bm25_state,
     read_bm25_postings,
-    start_bm25_stream,
-)
-from light_etl_windows_container_poc_spark.streaming.heavy_hitters import (
-    live_partial_dirs,
 )
 
 TERMS = ("spark", "query", "window")
@@ -55,8 +52,8 @@ def _ingest(spark, sf_dir, tmp_path, n_files=3):
     state = str(tmp_path / "state")
     stream = (spark.readStream.schema(DOC_SCHEMA)
               .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_bm25_stream(stream, state, str(tmp_path / "ckpt"),
-                          "doc_id", "text")
+    q = summary.start(BM25, stream, state, str(tmp_path / "ckpt"),
+                      "doc_id", "text")
     q.awaitTermination(120)
     return state
 
@@ -83,7 +80,7 @@ def test_bm25_replay_and_compaction_are_answer_invariant(
 
     # crash-replay: re-land batch 0 from a handler (overwrite-by-tag)
     replay = _docs(spark, sf_dir).limit(5)
-    bm25_batch_handler(state, "doc_id", "text")(replay, 0)
+    summary.batch_handler(BM25, state, "doc_id", "text")(replay, 0)
     # state content for batch 0 changed shape, but re-running the REAL
     # ingest semantics means replaying the same rows; here we only
     # assert the protocol: the tag was overwritten, not duplicated
@@ -95,7 +92,7 @@ def test_bm25_replay_and_compaction_are_answer_invariant(
     topk_before = [tuple(r) for r in bm25_topk(spark, state2, TERMS).collect()]
 
     compact_bm25_state(spark, state2)
-    assert live_partial_dirs(state2) == ["batch_tag=compacted_1"]
+    assert summary.live_partial_dirs(state2) == ["batch_tag=compacted_1"]
     assert _cells(read_bm25_postings(spark, state2)) == before
     assert [tuple(r)
             for r in bm25_topk(spark, state2, TERMS).collect()] == topk_before
@@ -103,7 +100,7 @@ def test_bm25_replay_and_compaction_are_answer_invariant(
     # append-safety: a post-compaction batch lands ABOVE the watermark
     extra = spark.createDataFrame(
         [(10_000_001, "spark query window spark")], DOC_SCHEMA)
-    bm25_batch_handler(state2, "doc_id", "text")(extra, 99)
+    summary.batch_handler(BM25, state2, "doc_id", "text")(extra, 99)
     grown = _cells(read_bm25_postings(spark, state2))
     direct = _cells(bm25_partial(
         _docs(spark, sf_dir).unionByName(extra), "doc_id", "text"))
@@ -245,11 +242,8 @@ def test_bm25_takedown_serves_corpus_minus_deletions(spark, sf_dir, tmp_path):
 
     # ground truth: a fresh state over the corpus minus the deletions
     truth_state = str(tmp_path / "truth")
-    from light_etl_windows_container_poc_spark.streaming.bm25 import (
-        bm25_batch_handler,
-    )
     kept_docs = _docs(spark, sf_dir).filter(~F.col("doc_id").isin(gone))
-    bm25_batch_handler(truth_state, "doc_id", "text")(kept_docs, 0)
+    summary.batch_handler(BM25, truth_state, "doc_id", "text")(kept_docs, 0)
     truth = [tuple(r) for r in bm25_topk(spark, truth_state, TERMS).collect()]
     assert served == truth
 
@@ -445,7 +439,6 @@ def test_salted_join_advised_plan_shape(spark):
 # --------------------------------------------------------- phrase search ----
 def test_phrase_topk_exact_semantics(spark, tmp_path):
     from light_etl_windows_container_poc_spark.streaming.bm25 import (
-        bm25_batch_handler,
         bm25_delete_handler,
         phrase_topk,
     )
@@ -458,7 +451,7 @@ def test_phrase_topk_exact_semantics(spark, tmp_path):
          (4, "window windowjoin join"),               # no token split: 0
          (5, "a a a")],                               # overlap fixture
         DOC_SCHEMA)
-    bm25_batch_handler(state, "doc_id", "text")(docs, 0)
+    summary.batch_handler(BM25, state, "doc_id", "text")(docs, 0)
 
     got = {(r.doc_id, r.n_occurrences)
            for r in phrase_topk(spark, state, ("window", "join")).collect()}
@@ -497,10 +490,10 @@ def test_ingest_continues_after_delete_and_compaction(spark, tmp_path):
     )
 
     state = str(tmp_path / "state")
-    bm25_batch_handler(state, "doc_id", "text")(
+    summary.batch_handler(BM25, state, "doc_id", "text")(
         spark.createDataFrame([(1, "spark query"), (2, "spark window")],
                               DOC_SCHEMA), 0)
-    bm25_batch_handler(state, "doc_id", "text")(
+    summary.batch_handler(BM25, state, "doc_id", "text")(
         spark.createDataFrame([(3, "window query spark")], DOC_SCHEMA), 1)
 
     # delete doc 2 — the delete stream's OWN batch id 0 must not clobber
@@ -514,9 +507,9 @@ def test_ingest_continues_after_delete_and_compaction(spark, tmp_path):
     # ingest CONTINUES: the checkpointed posting stream's next ids are
     # small numbers — they must stay above the watermark, be served,
     # and survive the next compaction's sweep
-    bm25_batch_handler(state, "doc_id", "text")(
+    summary.batch_handler(BM25, state, "doc_id", "text")(
         spark.createDataFrame([(4, "spark spark window")], DOC_SCHEMA), 2)
-    bm25_batch_handler(state, "doc_id", "text")(
+    summary.batch_handler(BM25, state, "doc_id", "text")(
         spark.createDataFrame([(5, "query window")], DOC_SCHEMA), 3)
     assert {r.doc_id for r in bm25_topk(spark, state, TERMS).collect()} \
         == {1, 3, 4, 5}
@@ -642,7 +635,7 @@ def test_proximity_topk_semantics_and_phrase_equivalence(spark, tmp_path):
          (4, "window a b c join"),        # gap 4 -> slop>=4 only
          (5, "window join window join")],  # chains: (0,1),(0,3),(2,3)
         DOC_SCHEMA)
-    bm25_batch_handler(state, "doc_id", "text")(docs, 0)
+    summary.batch_handler(BM25, state, "doc_id", "text")(docs, 0)
 
     got1 = {(r.doc_id, r.n_matches)
             for r in proximity_topk(spark, state, ("window", "join"),

@@ -131,9 +131,8 @@ def test_bm25_serving_plan_prunes_postings(spark, sf_dir, tmp_path):
 
 
 def _ingest_docs(spark, sf_dir, tmp_path):
-    from light_etl_windows_container_poc_spark.streaming.bm25 import (
-        start_bm25_stream,
-    )
+    from light_etl_windows_container_poc_spark.streaming import summary
+    from light_etl_windows_container_poc_spark.streaming.bm25 import BM25
 
     src = str(tmp_path / "psrc")
     (spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -141,8 +140,8 @@ def _ingest_docs(spark, sf_dir, tmp_path):
     state = str(tmp_path / "pstate")
     stream = (spark.readStream.schema("doc_id long, text string")
               .option("maxFilesPerTrigger", 1).parquet(src))
-    q = start_bm25_stream(stream, state, str(tmp_path / "pckpt"),
-                          "doc_id", "text")
+    q = summary.start(BM25, stream, state, str(tmp_path / "pckpt"),
+                      "doc_id", "text")
     q.awaitTermination(120)
     return state
 

@@ -82,21 +82,21 @@ def test_lstar_zero_when_data_fits(spark):
 def test_stream_state_replay_idempotent(spark, tmp_path):
     """Re-applying an already-landed batch (the crash-replay case)
     leaves the read-time merge unchanged — overwrite-per-batch_tag."""
-    from light_etl_windows_container_poc_spark.streaming.qsketch import (
-        qsketch_batch_handler, read_qsketch)
+    from light_etl_windows_container_poc_spark.streaming import summary
+    from light_etl_windows_container_poc_spark.streaming.qsketch import QSKETCH
 
     df = _synth(spark, 3000)
     state = str(tmp_path / "state")
-    handler = qsketch_batch_handler(state, "k", "v", 64)
+    handler = summary.batch_handler(QSKETCH, state, "k", "v", 64)
     b0 = df.filter(F.col("k") < 1000)
     b1 = df.filter((F.col("k") >= 1000) & (F.col("k") < 2000))
     b2 = df.filter(F.col("k") >= 2000)
     for i, b in enumerate((b0, b1, b2)):
         handler(b, i)
     os.makedirs(os.path.join(state), exist_ok=True)
-    before = _cells(read_qsketch(spark, state, 64))
+    before = _cells(summary.read(QSKETCH, spark, state, 64))
     handler(b1, 1)  # replay
-    after = _cells(read_qsketch(spark, state, 64))
+    after = _cells(summary.read(QSKETCH, spark, state, 64))
     assert before == after
     direct = qsketch_build(df, "k", "v", 64)
     assert after == _cells(direct)
@@ -131,26 +131,26 @@ def test_compaction_is_answer_invariant(spark, tmp_path):
     from the first compaction plus fresh batches (the kept cells at the
     current L* plus scalars are exactly sufficient state, because
     future unions can only raise L*)."""
-    from light_etl_windows_container_poc_spark.streaming.qsketch import (
-        compact_qsketch_state, qsketch_batch_handler, read_qsketch)
+    from light_etl_windows_container_poc_spark.streaming import summary
+    from light_etl_windows_container_poc_spark.streaming.qsketch import QSKETCH
 
     df = _synth(spark, 4000)
     state = str(tmp_path / "state")
-    handler = qsketch_batch_handler(state, "k", "v", 64)
+    handler = summary.batch_handler(QSKETCH, state, "k", "v", 64)
     handler(df.filter(F.col("k") < 1500), 0)
     handler(df.filter((F.col("k") >= 1500) & (F.col("k") < 2500)), 1)
     part1 = df.filter(F.col("k") < 2500)
-    before = _cells(read_qsketch(spark, state, 64))
-    compact_qsketch_state(spark, state, 64)
-    after = _cells(read_qsketch(spark, state, 64))
+    before = _cells(summary.read(QSKETCH, spark, state, 64))
+    summary.compact(QSKETCH, spark, state, 64)
+    after = _cells(summary.read(QSKETCH, spark, state, 64))
     assert before == after == _cells(qsketch_build(part1, "k", "v", 64))
     assert os.path.isdir(os.path.join(state, "batch_tag=compacted_1"))
 
     handler(df.filter(F.col("k") >= 2500), 2)
-    merged = _cells(read_qsketch(spark, state, 64))
+    merged = _cells(summary.read(QSKETCH, spark, state, 64))
     assert merged == _cells(qsketch_build(df, "k", "v", 64))
-    compact_qsketch_state(spark, state, 64)
-    assert _cells(read_qsketch(spark, state, 64)) == merged
+    summary.compact(QSKETCH, spark, state, 64)
+    assert _cells(summary.read(QSKETCH, spark, state, 64)) == merged
     assert os.path.isdir(os.path.join(state, "batch_tag=compacted_2"))
 
 

@@ -69,15 +69,18 @@ def test_pack_blocks_null_vector_raises(spark):
 
     # 4 ids, dim 8, one null vector: 24 elements % 4 == 0 — the modulo
     # test would reshape to (4, 6) silently; the dim check must raise
-    rows = [(0, [float(i) for i in range(8)]),
-            (1, None),
-            (2, [float(i) for i in range(8)]),
-            (3, [float(i) for i in range(8)])]
-    df = (spark.createDataFrame(rows, "id long, v array<double>")
-          .select("id", "v", F.lit(0).alias("blk")))
-    packed = _pack_blocks(df).collect()[0]
-    with pytest.raises(ValueError, match="desync"):
-        _unpack_block(packed["ids"], packed["flat"], packed["dim"])
+    one_null = [(0, [float(i) for i in range(8)]),
+                (1, None),
+                (2, [float(i) for i in range(8)]),
+                (3, [float(i) for i in range(8)])]
+    # every vector null: ANSI size(NULL) is NULL, so dim arrives as None
+    all_null = [(0, None), (1, None)]
+    for rows in (one_null, all_null):
+        df = (spark.createDataFrame(rows, "id long, v array<double>")
+              .select("id", "v", F.lit(0).alias("blk")))
+        packed = _pack_blocks(df).collect()[0]
+        with pytest.raises(ValueError, match="desync"):
+            _unpack_block(packed["ids"], packed["flat"], packed["dim"])
 
 
 def test_pack_blocks_dim_roundtrip(spark):

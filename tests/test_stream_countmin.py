@@ -10,12 +10,8 @@ import os
 from pyspark.sql import functions as F
 
 from light_etl_windows_container_poc_spark.operators.sketches import cm_build
-from light_etl_windows_container_poc_spark.streaming.countmin import (
-    compact_countmin_state,
-    countmin_batch_handler,
-    read_countmin,
-    start_countmin_stream,
-)
+from light_etl_windows_container_poc_spark.streaming import summary
+from light_etl_windows_container_poc_spark.streaming.countmin import COUNTMIN
 
 SCHEMA = "token string"
 D, W = 3, 16
@@ -46,8 +42,8 @@ def _grid(df):
 def _run_stream(spark, src, state, ckpt):
     s = (spark.readStream.schema(SCHEMA)
          .option("maxFilesPerTrigger", 1).json(str(src)))
-    start_countmin_stream(s, state, ckpt, "token", D, W
-                          ).awaitTermination(120)
+    summary.start(COUNTMIN, s, state, ckpt, "token", D, W
+                  ).awaitTermination(120)
 
 
 def test_streamed_grid_equals_batch_grid_exactly(spark, tmp_path):
@@ -56,7 +52,7 @@ def test_streamed_grid_equals_batch_grid_exactly(spark, tmp_path):
     src, rows = _stream_tokens(tmp_path)
     state = str(tmp_path / "state")
     _run_stream(spark, src, state, str(tmp_path / "ckpt"))
-    streamed = _grid(read_countmin(spark, state))
+    streamed = _grid(summary.read(COUNTMIN, spark, state))
     batch = _grid(cm_build(
         spark.createDataFrame([(t,) for t in rows], SCHEMA), "token", D, W)
         .select(F.col("seed").cast("int"), "bucket", "cnt"))
@@ -67,25 +63,25 @@ def test_replay_is_idempotent(spark, tmp_path):
     src, rows = _stream_tokens(tmp_path)
     state = str(tmp_path / "state")
     _run_stream(spark, src, state, str(tmp_path / "ckpt"))
-    before = _grid(read_countmin(spark, state))
+    before = _grid(summary.read(COUNTMIN, spark, state))
     # crash-replay batch 0: its partial rewrites byte-equivalently
     replay = spark.createDataFrame(
         [(t,) for t in rows[:70]], SCHEMA)  # b0 is the first 70 rows
-    countmin_batch_handler(state, "token", D, W)(replay, 0)
-    assert _grid(read_countmin(spark, state)) == before
+    summary.batch_handler(COUNTMIN, state, "token", D, W)(replay, 0)
+    assert _grid(summary.read(COUNTMIN, spark, state)) == before
 
 
 def test_compaction_is_answer_invariant_and_append_safe(spark, tmp_path):
     src, rows = _stream_tokens(tmp_path)
     state = str(tmp_path / "state")
     _run_stream(spark, src, state, str(tmp_path / "ckpt"))
-    before = _grid(read_countmin(spark, state))
-    compact_countmin_state(spark, state)
-    assert _grid(read_countmin(spark, state)) == before
+    before = _grid(summary.read(COUNTMIN, spark, state))
+    summary.compact(COUNTMIN, spark, state)
+    assert _grid(summary.read(COUNTMIN, spark, state)) == before
     # post-compaction appends merge on top of the active generation
     extra = spark.createDataFrame([("hot",), ("new",)], SCHEMA)
-    countmin_batch_handler(state, "token", D, W)(extra, 2)
-    after = _grid(read_countmin(spark, state))
+    summary.batch_handler(COUNTMIN, state, "token", D, W)(extra, 2)
+    after = _grid(summary.read(COUNTMIN, spark, state))
     extra_grid = _grid(cm_build(extra, "token", D, W)
                        .select(F.col("seed").cast("int"), "bucket", "cnt"))
     want = dict(before)
@@ -93,9 +89,9 @@ def test_compaction_is_answer_invariant_and_append_safe(spark, tmp_path):
         want[cell] = want.get(cell, 0) + c
     assert after == want
     # replay of a SUBSUMED batch stays excluded (watermark, not listing)
-    countmin_batch_handler(state, "token", D, W)(
+    summary.batch_handler(COUNTMIN, state, "token", D, W)(
         spark.createDataFrame([(t,) for t in rows[:70]], SCHEMA), 0)
-    assert _grid(read_countmin(spark, state)) == want
+    assert _grid(summary.read(COUNTMIN, spark, state)) == want
 
 
 def test_unpublished_compaction_is_invisible(spark, tmp_path):
@@ -105,23 +101,23 @@ def test_unpublished_compaction_is_invisible(spark, tmp_path):
     src, _ = _stream_tokens(tmp_path)
     state = str(tmp_path / "state")
     _run_stream(spark, src, state, str(tmp_path / "ckpt"))
-    before = _grid(read_countmin(spark, state))
-    merged = read_countmin(spark, state)
+    before = _grid(summary.read(COUNTMIN, spark, state))
+    merged = summary.read(COUNTMIN, spark, state)
     # simulate the crash: generation dir exists, manifest never swapped
     merged.write.mode("overwrite").parquet(
         os.path.join(state, "batch_tag=compacted_1"))
-    assert _grid(read_countmin(spark, state)) == before
+    assert _grid(summary.read(COUNTMIN, spark, state)) == before
     # a re-run sweeps the orphan and publishes cleanly
-    compact_countmin_state(spark, state)
-    assert _grid(read_countmin(spark, state)) == before
+    summary.compact(COUNTMIN, spark, state)
+    assert _grid(summary.read(COUNTMIN, spark, state)) == before
 
 
 def test_streamed_histogram_equals_batch(spark, tmp_path):
     """Third payload of the manifest protocol: bin partials merge by
     addition, so streamed state == one-shot histogram exactly; a
     replayed batch rewrites instead of double-counting."""
-    from light_etl_windows_container_poc_spark.streaming.histogram import (
-        histogram_batch_handler, read_histogram, start_histogram_stream)
+    from light_etl_windows_container_poc_spark.streaming.histogram import \
+        HISTOGRAM
 
     src = tmp_path / "hsrc"
     src.mkdir()
@@ -136,10 +132,10 @@ def test_streamed_histogram_equals_batch(spark, tmp_path):
     state = str(tmp_path / "hstate")
     s = (spark.readStream.schema("cents long")
          .option("maxFilesPerTrigger", 1).json(str(src)))
-    start_histogram_stream(s, state, str(tmp_path / "hckpt"),
-                           "cents", 100).awaitTermination(120)
+    summary.start(HISTOGRAM, s, state, str(tmp_path / "hckpt"),
+                  "cents", 100).awaitTermination(120)
     streamed = {(r.bin, r.cnt)
-                for r in read_histogram(spark, state).collect()}
+                for r in summary.read(HISTOGRAM, spark, state).collect()}
     from pyspark.sql import functions as F
 
     batch = {(r.bin, r.cnt) for r in
@@ -149,10 +145,10 @@ def test_streamed_histogram_equals_batch(spark, tmp_path):
               .collect())}
     assert streamed == batch
     # crash-replay of batch 0
-    histogram_batch_handler(state, "cents", 100)(
+    summary.batch_handler(HISTOGRAM, state, "cents", 100)(
         spark.createDataFrame([(v,) for v in b0], "cents long"), 0)
     assert {(r.bin, r.cnt)
-            for r in read_histogram(spark, state).collect()} == batch
+            for r in summary.read(HISTOGRAM, spark, state).collect()} == batch
 
 
 def test_histogram_bins_agree_on_negative_cents(spark, tmp_path):
@@ -164,15 +160,15 @@ def test_histogram_bins_agree_on_negative_cents(spark, tmp_path):
     a red driver row."""
     import duckdb
 
-    from light_etl_windows_container_poc_spark.streaming.histogram import (
-        histogram_batch_handler, read_histogram)
+    from light_etl_windows_container_poc_spark.streaming.histogram import \
+        HISTOGRAM
 
     vals = list(range(-350, 351, 7))
     state = str(tmp_path / "negstate")
-    histogram_batch_handler(state, "cents", 100)(
+    summary.batch_handler(HISTOGRAM, state, "cents", 100)(
         spark.createDataFrame([(v,) for v in vals], "cents long"), 0)
     streamed = {(r.bin, r.cnt)
-                for r in read_histogram(spark, state).collect()}
+                for r in summary.read(HISTOGRAM, spark, state).collect()}
     oracle = {tuple(r) for r in duckdb.sql(
         "SELECT v // 100 AS bin, CAST(count(*) AS BIGINT) AS cnt "
         "FROM (SELECT unnest($vals) AS v) GROUP BY 1",
@@ -186,7 +182,7 @@ def test_streamed_hll_equals_batch_and_forgives_replay(spark, tmp_path):
     split AND any replay — re-applying batch 0 must leave the grid
     bit-identical."""
     from light_etl_windows_container_poc_spark.streaming.hll import (
-        hll_batch_handler, hll_grid, read_hll, start_hll_stream)
+        HLL, hll_grid)
 
     src = tmp_path / "hllsrc"
     src.mkdir()
@@ -201,16 +197,16 @@ def test_streamed_hll_equals_batch_and_forgives_replay(spark, tmp_path):
     state = str(tmp_path / "hllstate")
     s = (spark.readStream.schema("k long")
          .option("maxFilesPerTrigger", 1).json(str(src)))
-    start_hll_stream(s, state, str(tmp_path / "hllckpt"),
-                     "k", 64).awaitTermination(120)
+    summary.start(HLL, s, state, str(tmp_path / "hllckpt"),
+                  "k", 64).awaitTermination(120)
     streamed = {(r.bucket, r.reg)
-                for r in read_hll(spark, state).collect()}
+                for r in summary.read(HLL, spark, state).collect()}
     batch = {(r.bucket, r.reg) for r in
              hll_grid(spark.createDataFrame([(v,) for v in b0 + b1],
                                             "k long"), "k", 64).collect()}
     assert streamed == batch
     # replay batch 0: max-merge is idempotent, grid unchanged
-    hll_batch_handler(state, "k", 64)(
+    summary.batch_handler(HLL, state, "k", 64)(
         spark.createDataFrame([(v,) for v in b0], "k long"), 0)
     assert {(r.bucket, r.reg)
-            for r in read_hll(spark, state).collect()} == batch
+            for r in summary.read(HLL, spark, state).collect()} == batch

@@ -7,11 +7,9 @@ from __future__ import annotations
 import json
 import os
 
+from light_etl_windows_container_poc_spark.streaming import summary
 from light_etl_windows_container_poc_spark.streaming.heavy_hitters import (
-    compact_state,
-    heavy_hitters_batch_handler,
-    read_heavy_hitters,
-    start_heavy_hitters_stream,
+    HEAVY_HITTERS,
 )
 
 SCHEMA = "token string"
@@ -58,11 +56,11 @@ def test_stream_maintains_guarantees(spark, tmp_path):
     state = str(tmp_path / "state")
     s = (spark.readStream.schema(SCHEMA)
          .option("maxFilesPerTrigger", 1).json(str(src)))
-    q = start_heavy_hitters_stream(s, state, str(tmp_path / "ckpt"),
-                                   "token", K)
+    q = summary.start(HEAVY_HITTERS, s, state, str(tmp_path / "ckpt"),
+                      "token", K)
     q.awaitTermination(120)
     sketch = {r["token"]: r["est"]
-              for r in read_heavy_hitters(spark, state, K).collect()}
+              for r in summary.read(HEAVY_HITTERS, spark, state, K).collect()}
     _check_guarantees(sketch, stream_rows)
     assert "hot" in sketch and "warm" in sketch
 
@@ -75,14 +73,14 @@ def test_replay_is_idempotent(spark, tmp_path):
     state = str(tmp_path / "state")
     s = (spark.readStream.schema(SCHEMA)
          .option("maxFilesPerTrigger", 1).json(str(src)))
-    start_heavy_hitters_stream(
-        s, state, str(tmp_path / "ckpt"), "token", K).awaitTermination(120)
-    before = sorted(read_heavy_hitters(spark, state, K).collect())
+    summary.start(HEAVY_HITTERS, s, state, str(tmp_path / "ckpt"),
+                  "token", K).awaitTermination(120)
+    before = sorted(summary.read(HEAVY_HITTERS, spark, state, K).collect())
 
-    handler = heavy_hitters_batch_handler(state, "token", K)
+    handler = summary.batch_handler(HEAVY_HITTERS, state, "token", K)
     batch0 = spark.read.schema(SCHEMA).json(str(src / "a.json"))
     handler(batch0, 0)  # replay of micro-batch 0
-    after = sorted(read_heavy_hitters(spark, state, K).collect())
+    after = sorted(summary.read(HEAVY_HITTERS, spark, state, K).collect())
     assert before == after
 
 
@@ -91,22 +89,22 @@ def test_compaction_preserves_guarantees(spark, tmp_path):
     state = str(tmp_path / "state")
     s = (spark.readStream.schema(SCHEMA)
          .option("maxFilesPerTrigger", 1).json(str(src)))
-    start_heavy_hitters_stream(
-        s, state, str(tmp_path / "ckpt"), "token", K).awaitTermination(120)
-    compact_state(spark, state, K)
+    summary.start(HEAVY_HITTERS, s, state, str(tmp_path / "ckpt"),
+                  "token", K).awaitTermination(120)
+    summary.compact(HEAVY_HITTERS, spark, state, K)
     # one summary directory remains; guarantees still hold
     tags = [d for d in os.listdir(state) if d.startswith("batch_tag=")]
     assert tags == ["batch_tag=compacted_1"]
     sketch = {r["token"]: r["est"]
-              for r in read_heavy_hitters(spark, state, K).collect()}
+              for r in summary.read(HEAVY_HITTERS, spark, state, K).collect()}
     _check_guarantees(sketch, stream_rows)
     # appending AFTER compaction keeps working
-    handler = heavy_hitters_batch_handler(state, "token", K)
+    handler = summary.batch_handler(HEAVY_HITTERS, state, "token", K)
     extra = spark.createDataFrame(
         [("hot",)] * 50 + [("cold9",)] * 3, "token string")
     handler(extra, 99)
     sketch2 = {r["token"]: r["est"]
-               for r in read_heavy_hitters(spark, state, K).collect()}
+               for r in summary.read(HEAVY_HITTERS, spark, state, K).collect()}
     _check_guarantees(sketch2, stream_rows + ["hot"] * 50 + ["cold9"] * 3)
 
 
@@ -119,19 +117,19 @@ def test_compaction_twice_and_subsumed_replay(spark, tmp_path):
     state = str(tmp_path / "state")
     s = (spark.readStream.schema(SCHEMA)
          .option("maxFilesPerTrigger", 1).json(str(src)))
-    start_heavy_hitters_stream(
-        s, state, str(tmp_path / "ckpt"), "token", K).awaitTermination(120)
-    compact_state(spark, state, K)
-    handler = heavy_hitters_batch_handler(state, "token", K)
+    summary.start(HEAVY_HITTERS, s, state, str(tmp_path / "ckpt"),
+                  "token", K).awaitTermination(120)
+    summary.compact(HEAVY_HITTERS, spark, state, K)
+    handler = summary.batch_handler(HEAVY_HITTERS, state, "token", K)
     handler(spark.createDataFrame([("hot",)] * 40, "token string"), 7)
-    compact_state(spark, state, K)
+    summary.compact(HEAVY_HITTERS, spark, state, K)
     tags = [d for d in os.listdir(state) if d.startswith("batch_tag=")]
     assert tags == ["batch_tag=compacted_2"]
-    before = sorted(read_heavy_hitters(spark, state, K).collect())
+    before = sorted(summary.read(HEAVY_HITTERS, spark, state, K).collect())
     # replay micro-batch 0 — subsumed by generation 1, so invisible
     batch0 = spark.read.schema(SCHEMA).json(str(src / "a.json"))
     handler(batch0, 0)
-    after = sorted(read_heavy_hitters(spark, state, K).collect())
+    after = sorted(summary.read(HEAVY_HITTERS, spark, state, K).collect())
     assert before == after
     _check_guarantees({r["token"]: r["est"] for r in after},
                       stream_rows + ["hot"] * 40)
@@ -144,37 +142,38 @@ def test_compaction_crash_windows_lose_nothing(spark, tmp_path):
     PRE-compaction state; re-running compact_state recovers."""
     from light_etl_windows_container_poc_spark.operators.sketches import (
         mg_merge)
-    from light_etl_windows_container_poc_spark.streaming.heavy_hitters import (
-        _SCHEMA, live_partial_dirs)
 
     src, stream_rows = _stream_tokens(tmp_path)
     state = str(tmp_path / "state")
     s = (spark.readStream.schema(SCHEMA)
          .option("maxFilesPerTrigger", 1).json(str(src)))
-    start_heavy_hitters_stream(
-        s, state, str(tmp_path / "ckpt"), "token", K).awaitTermination(120)
-    before = sorted(read_heavy_hitters(spark, state, K).collect())
+    summary.start(HEAVY_HITTERS, s, state, str(tmp_path / "ckpt"),
+                  "token", K).awaitTermination(120)
+    before = sorted(summary.read(HEAVY_HITTERS, spark, state, K).collect())
 
     # window (a): staging written, crash before rename
-    live = live_partial_dirs(state)
+    live = summary.live_partial_dirs(state)
     paths = [os.path.join(state, d) for d in live]
-    merged = mg_merge(spark.read.schema(_SCHEMA).parquet(*paths)
+    merged = mg_merge(spark.read.schema(HEAVY_HITTERS.schema).parquet(*paths)
                       .select("token", "est"), K)
     merged.write.mode("overwrite").parquet(
         os.path.join(state, "_compact_staging"))
-    assert sorted(read_heavy_hitters(spark, state, K).collect()) == before
+    assert (sorted(summary.read(HEAVY_HITTERS, spark, state, K).collect())
+            == before)
 
     # window (b): renamed in, crash before the manifest swap —
     # readers must IGNORE the unpublished compacted dir
     os.rename(os.path.join(state, "_compact_staging"),
               os.path.join(state, "batch_tag=compacted_1"))
-    assert "batch_tag=compacted_1" not in live_partial_dirs(state)
-    assert sorted(read_heavy_hitters(spark, state, K).collect()) == before
+    assert "batch_tag=compacted_1" not in summary.live_partial_dirs(state)
+    assert (sorted(summary.read(HEAVY_HITTERS, spark, state, K).collect())
+            == before)
 
     # recovery: a re-run completes the compaction and answers match
-    compact_state(spark, state, K)
-    assert sorted(read_heavy_hitters(spark, state, K).collect()) == before
+    summary.compact(HEAVY_HITTERS, spark, state, K)
+    assert (sorted(summary.read(HEAVY_HITTERS, spark, state, K).collect())
+            == before)
     _check_guarantees(
         {r["token"]: r["est"]
-         for r in read_heavy_hitters(spark, state, K).collect()},
+         for r in summary.read(HEAVY_HITTERS, spark, state, K).collect()},
         stream_rows)
