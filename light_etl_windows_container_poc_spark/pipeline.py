@@ -8,13 +8,15 @@ streaming/watcher.py) job:
 
     discover files → route by path pattern → sanitize columns, coerce
     types, drop empty rows, enrich metadata (ALL tables in one plan) →
-    per-table append from the persisted frame → write the processing log
-    → archive inputs → fire completion callbacks.
+    per-table append from the persisted frame → write the call's
+    processing-log rows → archive inputs → fire completion callbacks.
 
 Scale shape: the input corpus is parsed and cleaned exactly ONCE — the
 routed+cleaned frame is persisted, per-table row counts come from one
 aggregation over it, and each table's append re-reads the cache, never
-the raw files. Discovery/routing/archive are metadata-only.
+the raw files. Discovery/routing/archive are metadata-only, and the
+processing log is one driver-side parquet write per call
+(`sinks.append_processing_log`), not a Spark job per table.
 
 Reliability surface (reference `enhanced_tasks.py`):
 - per-file retry with backoff then quarantine (`ingest_files_with_retry`
@@ -38,7 +40,7 @@ from pyspark.sql import functions as F
 from .operators.cleaning import (coerce_by_name, drop_empty_rows,
                                  sanitize_column_names)
 from .operators.routing import PatternRouter
-from .sinks import append_table, write_processing_log
+from .sinks import append_processing_log, append_table, log_entry
 from .sources.files import read_csv_auto
 
 
@@ -83,8 +85,11 @@ class ETLPipeline:
 
         Single-pass: the binaryFile scan + CSV parse + cleaning run once
         into a persisted frame; per-table counts come from ONE aggregation
-        over it and per-table appends re-read the cache. ``archive_dir``
-        moves successfully-ingested input files there afterwards.
+        over it and per-table appends re-read the cache. Each table's
+        outcome (success, or error with 0 rows) becomes one log row, and
+        the call's rows are written once after the loop, on the driver;
+        a failing log write raises. ``archive_dir`` moves
+        successfully-ingested input files there afterwards.
         """
         df = read_csv_auto(self.spark, input_dir, schema_ddl)
         routed = self.router.route(df, path_col="source_path")
@@ -96,26 +101,25 @@ class ETLPipeline:
                       cleaned.groupBy("target_table")
                       .agg(F.count(F.lit(1)).alias("n")).collect()}
             results: list[IngestResult] = []
+            log: list[dict] = []
             for table in sorted(counts):
                 t0 = time.time()
                 part = (cleaned.filter(F.col("target_table") == table)
                         .drop("target_table"))
                 try:
                     append_table(part, self.warehouse_dir, table)
-                    write_processing_log(
-                        self.spark, self.warehouse_dir, filename=input_dir,
-                        rows_processed=counts[table], status="success",
+                    log.append(log_entry(
+                        input_dir, counts[table], "success",
                         processing_time_seconds=time.time() - t0,
-                        sheet_name=table)
+                        sheet_name=table))
                     results.append(IngestResult(table, counts[table], "success"))
                 except Exception as e:  # log-and-continue, reference behavior
-                    write_processing_log(
-                        self.spark, self.warehouse_dir, filename=input_dir,
-                        rows_processed=0, status="error",
-                        error_message=str(e),
+                    log.append(log_entry(
+                        input_dir, 0, "error", error_message=str(e),
                         processing_time_seconds=time.time() - t0,
-                        sheet_name=table)
+                        sheet_name=table))
                     results.append(IngestResult(table, 0, "error", str(e)))
+            append_processing_log(self.warehouse_dir, log)
         finally:
             cleaned.unpersist()
         if archive_dir is not None and results and \
@@ -155,10 +159,8 @@ class ETLPipeline:
                     last_err = str(e)
                     time.sleep(backoff_seconds * (2 ** attempt))
             if last_err is not None:
-                write_processing_log(
-                    self.spark, self.warehouse_dir, filename=path,
-                    rows_processed=0, status="quarantined",
-                    error_message=last_err)
+                append_processing_log(self.warehouse_dir, [log_entry(
+                    path, 0, "quarantined", error_message=last_err)])
                 if quarantine_dir is not None and os.path.isfile(path):
                     _move_file(path, quarantine_dir)
                 results.append(IngestResult(os.path.basename(path), 0,

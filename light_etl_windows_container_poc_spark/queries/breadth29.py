@@ -71,7 +71,8 @@ def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length("text").cast("long").alias("w"), h.alias("h"))
     lu = F.round(1_000_000 * F.log((F.col("h") + 1) / F.lit(4294967296.0)))
     p = d.select("doc_id", "w", lu.cast("long").alias("lu_micro"))
-    pri = F.col("lu_micro").cast("double") / F.col("w")
+    # try_divide: a w = 0 doc ranks last (NULL) instead of raising under ANSI
+    pri = F.try_divide(F.col("lu_micro").cast("double"), F.col("w"))
     return p.orderBy(pri.desc(), "doc_id").limit(100)
 
 

@@ -131,9 +131,9 @@ def pipeline_e2e_stream_cert(spark: SparkSession,
         # checkpoint, own warehouse table), so they run concurrently:
         # the ~13s one-time streaming machinery cost is paid once, not
         # serially per stream. The SHARED processing-log table is the
-        # one overlap — append_table serializes same-path appends on a
-        # driver lock (concurrent appends to one parquet dir are unsafe
-        # under FileOutputCommitter; see sinks/__init__.py)
+        # one overlap — append_processing_log writes each batch's rows as
+        # its own file under the table's driver path lock, renamed into
+        # place (see sinks/__init__.py)
         streams = [(sub, start_excel_etl_stream(
             spark, os.path.join(drive, sub), ddl, wh,
             os.path.join(work, f"ckpt_{sub}"),

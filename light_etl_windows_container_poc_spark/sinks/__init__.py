@@ -5,6 +5,13 @@ chunks and logs every job to `etl_processing_log`
 (`dataframe_tasks.py:78-103`). Here the warehouse is partitioned parquet
 (append mode = the same always-append contract); the JDBC sink is kept
 for literal Postgres parity but gated on a driver jar.
+
+The processing log is the one table written without Spark: its rows are
+a handful of driver-side values per ingest call, so
+``append_processing_log`` writes them as one small parquet file with
+pyarrow — no job, no Python worker — under the same per-path lock as
+Spark appends, staged under a dot-name (hidden from Spark and pyarrow
+scans) and renamed into place.
 """
 
 from __future__ import annotations
@@ -13,8 +20,11 @@ import contextlib
 import os
 import threading
 import time
+import uuid
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 
 # Concurrent appends to ONE parquet directory are unsafe under Hadoop's
 # FileOutputCommitter: every job stages under `<dir>/_temporary/0/`, and
@@ -26,6 +36,9 @@ from pyspark.sql import DataFrame, Row, SparkSession
 # driver lock; distinct tables keep distinct locks, so cross-table
 # concurrency (the common case) is untouched. Cross-PROCESS appends are
 # out of scope — certs isolate per-process via cert_work_dir.
+# Processing-log files bypass the committer (append_processing_log writes
+# them on the driver) but still take this lock and land by atomic rename,
+# so a log file never appears inside a Spark append's commit window.
 # key -> (lock, refcount): refcounted so entries reap deterministically
 # when the last holder releases — a long-lived driver's cert scratch
 # paths would otherwise grow the dict unboundedly (r13 ADVICE).
@@ -69,19 +82,60 @@ def append_table(df: DataFrame, warehouse_dir: str, table: str,
     return path
 
 
+# `etl_processing_log` (reference `database_postgres.py:71-83`): the one
+# schema every writer of the table uses, so its parquet files never mix
+PROCESSING_LOG_SCHEMA = pa.schema([
+    ("filename", pa.string()), ("sheet_name", pa.string()),
+    ("rows_processed", pa.int64()), ("status", pa.string()),
+    ("error_message", pa.string()), ("processed_at", pa.string()),
+    ("processing_time_seconds", pa.float64())])
+
+
+def log_entry(filename: str, rows_processed: int, status: str,
+              error_message: str | None = None,
+              processing_time_seconds: float = 0.0,
+              sheet_name: str = "") -> dict:
+    """One processing-log row, stamped now; the error is cut to 1000
+    characters like the reference's column."""
+    return {"filename": filename, "sheet_name": sheet_name,
+            "rows_processed": int(rows_processed), "status": status,
+            "error_message": (error_message or "")[:1000],
+            "processed_at": time.strftime("%Y-%m-%d %H:%M:%S"),
+            "processing_time_seconds": float(processing_time_seconds)}
+
+
+def append_processing_log(warehouse_dir: str, entries: list[dict]) -> None:
+    """Append ``log_entry`` rows to `etl_processing_log` as ONE parquet
+    file written on the driver: no Spark job. The file is staged under a
+    dot-name and renamed into place while holding the table's path lock,
+    so readers and concurrent appenders never see a partial file."""
+    if not entries:
+        return
+    path = os.path.join(warehouse_dir, "etl_processing_log")
+    table = pa.Table.from_pylist(entries, schema=PROCESSING_LOG_SCHEMA)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4()}-log.snappy.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    with _path_lock(path):
+        try:
+            pq.write_table(table, tmp, compression="snappy")
+            os.replace(tmp, os.path.join(path, name))
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+            raise
+
+
 def write_processing_log(spark: SparkSession, warehouse_dir: str,
                          filename: str, rows_processed: int, status: str,
                          error_message: str | None = None,
                          processing_time_seconds: float = 0.0,
                          sheet_name: str = "") -> None:
-    """`etl_processing_log` parity (reference `database_postgres.py:71-83`)."""
-    log = spark.createDataFrame([Row(
-        filename=filename, sheet_name=sheet_name,
-        rows_processed=rows_processed, status=status,
-        error_message=(error_message or "")[:1000],
-        processed_at=time.strftime("%Y-%m-%d %H:%M:%S"),
-        processing_time_seconds=float(processing_time_seconds))])
-    append_table(log, warehouse_dir, "etl_processing_log")
+    """One-row ``append_processing_log``; ``spark`` is unused and kept
+    for callers of the original signature."""
+    append_processing_log(warehouse_dir, [log_entry(
+        filename, rows_processed, status, error_message,
+        processing_time_seconds, sheet_name)])
 
 
 def write_jdbc(df: DataFrame, url: str, table: str,

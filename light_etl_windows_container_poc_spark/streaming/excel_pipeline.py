@@ -27,7 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators.cleaning import (coerce_by_name, drop_empty_rows,
                                   sanitize_column_names, with_etl_metadata)
 from ..operators.routing import PatternRouter
-from ..sinks import append_table
+from ..sinks import append_processing_log, append_table, log_entry
 
 
 def excel_etl_batch_handler(warehouse_dir: str,
@@ -64,25 +64,13 @@ def excel_etl_batch_handler(warehouse_dir: str,
                 sub = (cleaned.filter(F.col("target_table") == table)
                        .drop("target_table"))
                 append_table(sub, warehouse_dir, table)
-            if per_file:
-                # EXACTLY write_processing_log's 7-column schema: this
-                # table is shared with the batch pipeline, and a
-                # divergent column set would leave mixed parquet
-                # schemas under one dir (whichever footer wins the
-                # scan silently hides the other's columns). The micro-
-                # batch id lives in the streaming checkpoint/metrics,
-                # not here.
-                dt = time.time() - t0
-                spark = batch.sparkSession
-                log = spark.createDataFrame(
-                    [(r["source_path"], "", int(r["n"]), "completed", "",
-                      time.strftime("%Y-%m-%d %H:%M:%S"), float(dt))
-                     for r in per_file],
-                    "filename string, sheet_name string, "
-                    "rows_processed long, status string, "
-                    "error_message string, processed_at string, "
-                    "processing_time_seconds double")
-                append_table(log, warehouse_dir, "etl_processing_log")
+            # the micro-batch id lives in the streaming checkpoint/
+            # metrics, not in the log rows
+            dt = time.time() - t0
+            append_processing_log(warehouse_dir, [
+                log_entry(r["source_path"], r["n"], "completed",
+                          processing_time_seconds=dt)
+                for r in per_file])
         finally:
             cleaned.unpersist()
 

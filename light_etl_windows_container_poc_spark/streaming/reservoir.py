@@ -32,7 +32,10 @@ _SCHEMA = "doc_id long, w long, lu_micro long"
 
 
 def _priority():
-    return F.col("lu_micro").cast("double") / F.col("w")
+    # try_divide: an empty-text doc (w = 0) gets a NULL priority, which
+    # sorts last under desc — the non-ANSI result, instead of ANSI's
+    # DIVIDE_BY_ZERO
+    return F.try_divide(F.col("lu_micro").cast("double"), F.col("w"))
 
 
 def reservoir_candidates(docs: DataFrame) -> DataFrame:

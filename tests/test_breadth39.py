@@ -144,3 +144,15 @@ def test_reservoir_by_source_plan_is_partitioned_and_bounded(spark,
     plan = formatted_plan(QUERIES["reservoir_by_source"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "TakeOrderedAndProject" in plan
+
+
+def test_reservoir_empty_text_doc_ranks_last_under_ansi(spark):
+    """w = 0 (empty text) must not raise DIVIDE_BY_ZERO on the default
+    ANSI session: its priority is NULL and sorts after every other doc."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    docs = [(1, 5), (2, 0), (3, 40), (4, 1)]
+    cands = reservoir_candidates(_docs(spark, docs))
+    top3 = [r.doc_id for r in reservoir_topk(cands, 3).collect()]
+    assert len(top3) == 3 and 2 not in top3
+    everything = reservoir_topk(cands, 4).collect()
+    assert everything[-1].doc_id == 2 and everything[-1].w == 0

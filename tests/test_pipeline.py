@@ -128,3 +128,104 @@ def test_pipeline_retries_then_quarantines_poison_file(spark, tmp_path):
     assert log.filter(log.status == "quarantined").count() == 1
     # failure callback fired (batch contains a non-success result)
     assert "bad" in seen
+
+
+def _log_parts(wh):
+    import os
+
+    d = os.path.join(wh, "etl_processing_log")
+    if not os.path.isdir(d):
+        return set()
+    return {n for n in os.listdir(d) if n.endswith(".parquet")}
+
+
+def _three_table_drop(tmp_path):
+    src = tmp_path / "drop"
+    _mkcsv(src / "customer_data" / "a.csv", ["Ana,2024-01-05,10.5"])
+    _mkcsv(src / "sales_data" / "b.csv",
+           ["Cy,2024-03-01,30.25", "Di,2024-03-02,1.0"])
+    _mkcsv(src / "product_info" / "c.csv", ["Ed,2024-04-01,2.0"])
+    return src
+
+
+def test_ingest_log_is_one_driver_side_file(spark, tmp_path, monkeypatch):
+    """One ingest call over several routed tables adds exactly ONE part
+    file to etl_processing_log, and writing it runs no Spark job."""
+    import light_etl_windows_container_poc_spark.pipeline as pl
+
+    src = _three_table_drop(tmp_path)
+    wh = str(tmp_path / "warehouse")
+    pipe = pl.ETLPipeline(spark, warehouse_dir=wh)
+    ddl = "`Customer Name` string, `Order Date` string, Amount string"
+    pipe.ingest_csv_dir(str(src), ddl, batch_ts="2026-01-01 00:00:00")
+    before = _log_parts(wh)
+
+    sc = spark.sparkContext
+    real = pl.append_processing_log
+    logged = []
+
+    def in_log_group(warehouse_dir, entries):
+        # any job the log write launches lands in its own group
+        sc.setJobGroup("log_write", "processing log")
+        try:
+            real(warehouse_dir, entries)
+        finally:
+            sc.setJobGroup("ingest_call", "ingest")
+        logged.append(len(entries))
+
+    monkeypatch.setattr(pl, "append_processing_log", in_log_group)
+    sc.setJobGroup("ingest_call", "ingest")
+    try:
+        results = pipe.ingest_csv_dir(str(src), ddl,
+                                      batch_ts="2026-01-01 00:00:00")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    tracker = sc.statusTracker()
+    assert len(results) == 3 and logged == [3]
+    assert tracker.getJobIdsForGroup("ingest_call")   # the tracker sees jobs
+    assert tracker.getJobIdsForGroup("log_write") == []
+    assert len(_log_parts(wh) - before) == 1
+    log = spark.read.parquet(f"{wh}/etl_processing_log")
+    assert log.count() == 6
+    assert sorted((r.sheet_name, r.rows_processed) for r in log.collect()
+                  if r.status == "success") == sorted(
+        [("dim_customers", 1), ("fact_sales", 2), ("dim_products", 1)] * 2)
+
+
+def test_ingest_log_error_rows_come_from_the_one_write(spark, tmp_path,
+                                                       monkeypatch):
+    """A failing table append logs `error` with 0 rows and a 1000-char
+    message; the other tables log `success`; all in one new part file."""
+    import light_etl_windows_container_poc_spark.pipeline as pl
+
+    src = _three_table_drop(tmp_path)
+    wh = str(tmp_path / "warehouse")
+    real = pl.append_table
+
+    def failing(df, warehouse_dir, table, *a, **k):
+        if table == "fact_sales":
+            raise RuntimeError("disk full " + "x" * 2000)
+        return real(df, warehouse_dir, table, *a, **k)
+
+    monkeypatch.setattr(pl, "append_table", failing)
+    results = pl.ETLPipeline(spark, warehouse_dir=wh).ingest_csv_dir(
+        str(src), "`Customer Name` string, `Order Date` string, Amount string",
+        batch_ts="2026-01-01 00:00:00", notify=False)
+
+    by_table = {r.table: r for r in results}
+    assert by_table["fact_sales"].status == "error"
+    assert by_table["fact_sales"].rows == 0
+    assert by_table["fact_sales"].error.startswith("disk full")
+    assert {t: (r.rows, r.status) for t, r in by_table.items()
+            if t != "fact_sales"} == {"dim_customers": (1, "success"),
+                                      "dim_products": (1, "success")}
+    assert len(_log_parts(wh)) == 1
+    rows = {r.sheet_name: r for r in
+            spark.read.parquet(f"{wh}/etl_processing_log").collect()}
+    assert {t: (r.rows_processed, r.status) for t, r in rows.items()} == {
+        t: (r.rows, r.status) for t, r in by_table.items()}
+    assert rows["fact_sales"].error_message == by_table["fact_sales"].error[:1000]
+    assert len(rows["fact_sales"].error_message) == 1000
+    assert rows["dim_customers"].error_message == ""
